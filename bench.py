@@ -36,6 +36,8 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from shacl_rust_spark.pipeline.run import driver_memory
+
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
     local_dir = tempfile.mkdtemp(prefix="bench_local_", dir=shm)
 
@@ -44,7 +46,7 @@ def main() -> None:
         .appName("shacl-rust-spark-bench")
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", driver_memory())
         .config("spark.local.dir", local_dir)
         .config("spark.sql.adaptive.enabled", "true")
     )

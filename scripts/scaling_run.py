@@ -95,6 +95,7 @@ def main() -> int:
     t_start = time.time()
     t_mid = None
     summary = None
+    run = None
     try:
         run = subprocess.Popen(
             [sys.executable, "scripts/scaling.py", sf_dir, replicas],
@@ -113,6 +114,15 @@ def main() -> int:
                     pass
         rc = run.wait()
     finally:
+        # never orphan the scaling.py child (and its JVMs) when this
+        # wrapper is interrupted mid-run
+        if run is not None and run.poll() is None:
+            run.terminate()
+            try:
+                run.wait(timeout=30)
+            except subprocess.TimeoutExpired:
+                run.kill()
+                run.wait()
         sampler.send_signal(signal.SIGTERM)
         sampler.wait()
     t_end = time.time()
@@ -127,6 +137,9 @@ def main() -> int:
     except OSError:
         pass
     summary["probe_sec"] = p
+    # False: scaling.py never printed its leg-boundary line, so both
+    # legs' host stats below cover the whole run
+    summary["boundary_found"] = t_mid is not None
     summary["load1_before"] = round(load1, 2)
     summary["host"] = {
         "N_leg": leg_stats(samples, t_start, t_mid or t_end),

@@ -32,10 +32,13 @@ the partitioning), so each iteration re-shuffles only the ranks frame
 groupBy(dst) partial-agg sum → left join back to nodes: two shuffles
 of node-cardinality data, zero re-scans of the edge list.
 ``localCheckpoint`` per iteration cuts the lineage chain (Catalyst
-has no recursive plans — SURVEY.md §4). The loop runs with AQE off on
-a CLONED session (pipeline/cc.py machinery) so the static
+has no recursive plans — SURVEY.md §4). PageRank, personalized
+PageRank and the Markov mass vector are one recurrence
+(:func:`_power_iteration`); it and HITS run with AQE off on a session
+cloned by ``pipeline.cc._scoped_session``, so the static
 co-partitioning isn't re-coalesced away and concurrent jobs on the
-caller's session keep AQE.
+caller's session keep AQE. The loop frames cross back to the caller's
+session through ``_rebind``.
 """
 
 from __future__ import annotations
@@ -43,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..pipeline.cc import _clone_session, _rebind
+from ..pipeline.cc import _AQE_OFF, _rebind, _scoped_session
 
 DEFAULT_SCALE = 10**12
 
@@ -54,6 +57,97 @@ def _clean_edges(edges: DataFrame) -> DataFrame:
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .dropDuplicates(["src", "dst"])
     )
+
+
+def _power_iteration(
+    trans: DataFrame,
+    seeds: DataFrame | None,
+    iterations: int,
+    damping_pct: int,
+    scale: int,
+) -> DataFrame:
+    """The fixed-point-integer power iteration shared by pagerank,
+    personalized_pagerank and markov_stationary: trans(src, dst, n
+    bigint) with set semantics (one row per (src, dst)), seeds(node) or
+    None for "every node is a seed" → (node, rank_scaled bigint) on the
+    caller's session, empty when no node is a seed.
+
+    rank⁰ = scale DIV s on each seed (s = number of seed nodes), 0
+    elsewhere; with rowtot(u) = Σ_{u→w} n_uw,
+    rankᵏ⁺¹(v) = [v seed]·((100−d)·(scale DIV s)) DIV 100
+                 + (d · Σ_{u→v} (rankᵏ(u)·n_uv) DIV rowtot(u)) DIV 100.
+
+    Plan: the transition list is partitioned by src ONCE with rowtot
+    riding along, so each step shuffles only the node-cardinality rank
+    frame; the seed flag rides the node frame so the teleport term is a
+    codegen'd conditional, not a join."""
+    spark = trans.sparkSession
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    loop_spark = _scoped_session(spark, _AQE_OFF)
+    trans = _rebind(trans.localCheckpoint(eager=True), loop_spark)
+    rowtot = trans.groupBy("src").agg(F.sum("n").alias("rowtot"))
+    linked = (
+        trans.join(rowtot, "src")
+        .repartition(n_parts, "src")
+        .localCheckpoint(eager=True)
+    )
+    nodes = (
+        trans.select(F.col("src").alias("node"))
+        .unionByName(trans.select(F.col("dst").alias("node")))
+        .dropDuplicates(["node"])
+    )
+    if seeds is None:
+        nodes = nodes.withColumn("_is_seed", F.lit(1))
+    else:
+        seeds = _rebind(seeds.select("node"), loop_spark)
+        nodes = (
+            nodes.join(seeds.dropDuplicates(["node"])
+                       .withColumn("_is_seed", F.lit(1)), "node", "left")
+            .select("node",
+                    F.coalesce("_is_seed", F.lit(0)).alias("_is_seed"))
+        )
+    nodes = nodes.repartition(n_parts, "node").localCheckpoint(eager=True)
+    s = nodes.where(F.col("_is_seed") == 1).count()
+    if s == 0:
+        return spark.createDataFrame([], "node string, rank_scaled bigint")
+    base = scale // s
+    teleport = ((100 - damping_pct) * base) // 100
+    is_seed = F.col("_is_seed") == 1
+    ranks = nodes.select(
+        "node",
+        F.when(is_seed, F.lit(base)).otherwise(F.lit(0))
+        .cast("bigint").alias("rank_scaled"),
+    ).localCheckpoint(eager=True)
+    for _ in range(iterations):
+        contrib = (
+            linked.join(ranks, linked["src"] == ranks["node"])
+            .select(
+                F.col("dst"),
+                F.expr("(rank_scaled * n) DIV rowtot").alias("share"),
+            )
+            .groupBy("dst")
+            .agg(F.sum("share").alias("inflow"))
+        )
+        ranks = (
+            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
+            .select(
+                nodes["node"],
+                (
+                    F.when(is_seed, F.lit(teleport)).otherwise(F.lit(0))
+                    + F.expr(
+                        f"({damping_pct} * coalesce(inflow, 0L)) DIV 100"
+                    )
+                ).cast("bigint").alias("rank_scaled"),
+            )
+            .localCheckpoint(eager=True)
+        )
+    return _rebind(ranks, spark)
+
+
+def _unit_transitions(edges: DataFrame) -> DataFrame:
+    """Deduplicated edges as unit-weight transitions: rowtot = out-degree,
+    so the shared power iteration's share is rank DIV outdeg."""
+    return _clean_edges(edges).withColumn("n", F.lit(1).cast("bigint"))
 
 
 def pagerank(
@@ -71,83 +165,14 @@ def pagerank(
 
     Duplicate and null-endpoint edges are dropped (set semantics —
     a repeated assertion is one link). ``damping_pct`` is an integer
-    percentage so the teleport/damping split stays in ℤ.
+    percentage so the teleport/damping split stays in ℤ. Every node is
+    a seed of :func:`_power_iteration`.
     """
     if not 0 <= damping_pct <= 100:
         raise ValueError("damping_pct must be in [0, 100]")
-    spark = edges.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _clean_edges(edges).localCheckpoint(eager=True)
-
-    loop_spark = _clone_session(spark)
-    if loop_spark is not None:
-        loop_spark.conf.set("spark.sql.adaptive.enabled", "false")
-        edges = _rebind(edges, loop_spark)
-        aqe_was = None
-    else:
-        loop_spark = spark
-        aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        # static across iterations: partition the edge list (with its
-        # per-src out-degree riding along) by the join key once
-        outdeg = edges.groupBy("src").agg(
-            F.count(F.lit(1)).alias("outdeg")
-        )
-        linked = (
-            edges.join(outdeg, "src")
-            .repartition(n_parts, "src")
-            .localCheckpoint(eager=True)
-        )
-        nodes = (
-            edges.select(F.col("src").alias("node"))
-            .unionByName(edges.select(F.col("dst").alias("node")))
-            .dropDuplicates(["node"])
-            .repartition(n_parts, "node")
-            .localCheckpoint(eager=True)
-        )
-        n = nodes.count()
-        if n == 0:
-            return spark.createDataFrame(
-                [], "node string, rank_scaled bigint"
-            )
-        base = scale // n
-        teleport = ((100 - damping_pct) * base) // 100
-        ranks = nodes.withColumn(
-            "rank_scaled", F.lit(base).cast("bigint")
-        ).localCheckpoint(eager=True)
-        for _ in range(iterations):
-            contrib = (
-                linked.join(
-                    ranks, linked["src"] == ranks["node"]
-                )
-                .select(
-                    F.col("dst"),
-                    F.expr("rank_scaled DIV outdeg").alias("share"),
-                )
-                .groupBy("dst")
-                .agg(F.sum("share").alias("inflow"))
-            )
-            ranks = (
-                nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-                .select(
-                    "node",
-                    (
-                        F.lit(teleport)
-                        + F.expr(
-                            f"({damping_pct} * coalesce(inflow, 0L))"
-                            " DIV 100"
-                        )
-                    ).cast("bigint").alias("rank_scaled"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        if aqe_was is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-    if ranks.sparkSession is not spark:
-        ranks = _rebind(ranks, spark)
-    return ranks
+    return _power_iteration(
+        _unit_transitions(edges), None, iterations, damping_pct, scale
+    )
 
 
 def personalized_pagerank(
@@ -169,92 +194,15 @@ def personalized_pagerank(
     + (d · Σ_{u→v} rankᵏ(u) DIV outdeg(u)) DIV 100. All BIGINT, so
     the result is bit-identical on any engine / partitioning.
 
-    Plan: identical loop shape to pagerank — edge list partitioned by
-    src ONCE with out-degrees riding along, each iteration shuffles
-    only the rank frame; the is_seed flag rides the node frame so the
-    teleport term is a codegen'd conditional, not a join. Nodes the
-    walk never reaches keep rank 0 and are dropped at the end (PPR
-    output is seed-local by design, typically ≪ |V|)."""
+    Plan: the :func:`_power_iteration` loop pagerank runs, with only
+    the seed nodes teleporting. Nodes the walk never reaches keep
+    rank 0 and are dropped at the end (PPR output is seed-local by
+    design, typically ≪ |V|)."""
     if not 0 <= damping_pct <= 100:
         raise ValueError("damping_pct must be in [0, 100]")
-    spark = edges.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _clean_edges(edges).localCheckpoint(eager=True)
-
-    loop_spark = _clone_session(spark)
-    if loop_spark is not None:
-        loop_spark.conf.set("spark.sql.adaptive.enabled", "false")
-        edges = _rebind(edges, loop_spark)
-        seeds = _rebind(seeds, loop_spark)
-        aqe_was = None
-    else:
-        loop_spark = spark
-        aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        outdeg = edges.groupBy("src").agg(
-            F.count(F.lit(1)).alias("outdeg")
-        )
-        linked = (
-            edges.join(outdeg, "src")
-            .repartition(n_parts, "src")
-            .localCheckpoint(eager=True)
-        )
-        nodes = (
-            edges.select(F.col("src").alias("node"))
-            .unionByName(edges.select(F.col("dst").alias("node")))
-            .dropDuplicates(["node"])
-            .join(seeds.select("node").dropDuplicates(["node"])
-                  .withColumn("_is_seed", F.lit(1)),
-                  "node", "left")
-            .select("node",
-                    F.coalesce("_is_seed", F.lit(0)).alias("_is_seed"))
-            .repartition(n_parts, "node")
-            .localCheckpoint(eager=True)
-        )
-        s = nodes.where(F.col("_is_seed") == 1).count()
-        if s == 0:
-            return spark.createDataFrame(
-                [], "node string, rank_scaled bigint"
-            )
-        sbase = scale // s
-        steleport = ((100 - damping_pct) * sbase) // 100
-        ranks = nodes.select(
-            "node",
-            F.when(F.col("_is_seed") == 1, F.lit(sbase))
-            .otherwise(F.lit(0)).cast("bigint").alias("rank_scaled"),
-        ).localCheckpoint(eager=True)
-        for _ in range(iterations):
-            contrib = (
-                linked.join(ranks, linked["src"] == ranks["node"])
-                .select(
-                    F.col("dst"),
-                    F.expr("rank_scaled DIV outdeg").alias("share"),
-                )
-                .groupBy("dst")
-                .agg(F.sum("share").alias("inflow"))
-            )
-            ranks = (
-                nodes.join(contrib, nodes["node"] == contrib["dst"],
-                           "left")
-                .select(
-                    nodes["node"],
-                    (
-                        F.when(F.col("_is_seed") == 1,
-                               F.lit(steleport)).otherwise(F.lit(0))
-                        + F.expr(
-                            f"({damping_pct} * coalesce(inflow, 0L))"
-                            " DIV 100"
-                        )
-                    ).cast("bigint").alias("rank_scaled"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        if aqe_was is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-    if ranks.sparkSession is not spark:
-        ranks = _rebind(ranks, spark)
+    ranks = _power_iteration(
+        _unit_transitions(edges), seeds, iterations, damping_pct, scale
+    )
     return ranks.where(F.col("rank_scaled") > 0)
 
 
@@ -283,71 +231,52 @@ def hits(edges: DataFrame, iterations: int = 3) -> DataFrame:
         raise ValueError("iterations must be >= 1")
     spark = edges.sparkSession
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _clean_edges(edges).localCheckpoint(eager=True)
-
-    loop_spark = _clone_session(spark)
-    if loop_spark is not None:
-        loop_spark.conf.set("spark.sql.adaptive.enabled", "false")
-        edges = _rebind(edges, loop_spark)
-        aqe_was = None
-    else:
-        loop_spark = spark
-        aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        e_src = edges.repartition(n_parts, "src") \
-            .localCheckpoint(eager=True)
-        e_dst = edges.repartition(n_parts, "dst") \
-            .localCheckpoint(eager=True)
-        nodes = (
-            edges.select(F.col("src").alias("node"))
-            .unionByName(edges.select(F.col("dst").alias("node")))
-            .dropDuplicates(["node"])
-            .repartition(n_parts, "node")
+    loop_spark = _scoped_session(spark, _AQE_OFF)
+    edges = _rebind(_clean_edges(edges).localCheckpoint(eager=True),
+                    loop_spark)
+    e_src = edges.repartition(n_parts, "src").localCheckpoint(eager=True)
+    e_dst = edges.repartition(n_parts, "dst").localCheckpoint(eager=True)
+    nodes = (
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
+        .dropDuplicates(["node"])
+        .repartition(n_parts, "node")
+        .localCheckpoint(eager=True)
+    )
+    hub = nodes.withColumn("h", F.lit(1).cast("bigint"))
+    for _ in range(iterations):
+        inflow = (
+            e_src.join(hub, e_src["src"] == hub["node"])
+            .groupBy("dst")
+            .agg(F.sum("h").alias("a"))
+        )
+        auth = (
+            nodes.join(inflow, nodes["node"] == inflow["dst"], "left")
+            .select(
+                "node",
+                F.coalesce("a", F.lit(0)).cast("bigint").alias("a"),
+            )
             .localCheckpoint(eager=True)
         )
-        hub = nodes.withColumn("h", F.lit(1).cast("bigint"))
-        auth = None
-        for _ in range(iterations):
-            inflow = (
-                e_src.join(hub, e_src["src"] == hub["node"])
-                .groupBy("dst")
-                .agg(F.sum("h").alias("a"))
+        outflow = (
+            e_dst.join(auth, e_dst["dst"] == auth["node"])
+            .groupBy("src")
+            .agg(F.sum("a").alias("h"))
+        )
+        hub = (
+            nodes.join(outflow, nodes["node"] == outflow["src"], "left")
+            .select(
+                "node",
+                F.coalesce("h", F.lit(0)).cast("bigint").alias("h"),
             )
-            auth = (
-                nodes.join(inflow, nodes["node"] == inflow["dst"],
-                           "left")
-                .select(
-                    "node",
-                    F.coalesce("a", F.lit(0)).cast("bigint").alias("a"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            outflow = (
-                e_dst.join(auth, e_dst["dst"] == auth["node"])
-                .groupBy("src")
-                .agg(F.sum("a").alias("h"))
-            )
-            hub = (
-                nodes.join(outflow, nodes["node"] == outflow["src"],
-                           "left")
-                .select(
-                    "node",
-                    F.coalesce("h", F.lit(0)).cast("bigint").alias("h"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        if aqe_was is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
+            .localCheckpoint(eager=True)
+        )
     out = auth.join(hub, "node").select(
         "node",
         F.col("a").alias("authority"),
         F.col("h").alias("hub"),
     )
-    if out.sparkSession is not spark:
-        out = _rebind(out, spark)
-    return out
+    return _rebind(out, spark)
 
 
 def scc(edges: DataFrame, max_pairs: int = 2_000_000) -> DataFrame:
@@ -600,8 +529,12 @@ def scc_fwbw(
         # set; a small remainder finishes in one driver pass (this is
         # what keeps SCC-condensation chains from costing one level
         # per SCC — see docstring)
-        if tarjan_cutoff and active_edges.count() <= tarjan_cutoff:
-            pair_list = [(r[0], r[1]) for r in active_edges.collect()]
+        # one bounded probe (at most tarjan_cutoff + 1 rows) both sizes
+        # the remainder and, when it fits, is the edge list itself
+        if tarjan_cutoff and len(
+            probe := active_edges.limit(tarjan_cutoff + 1).collect()
+        ) <= tarjan_cutoff:
+            pair_list = [(r[0], r[1]) for r in probe]
             stats["tarjan_fallback"] = True
             stats["tarjan_edges"] = len(pair_list)
             comp = _tarjan_scc_driver(pair_list)
@@ -738,6 +671,19 @@ def _canon_undirected(edges: DataFrame) -> DataFrame:
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def _sym_adj(edges: DataFrame) -> DataFrame:
+    """Symmetric adjacency (node, nbr) of the undirected simple graph —
+    every canonical edge in both directions, checkpointed once so the
+    iterative consumers join the materialization every round."""
+    e = _canon_undirected(edges)
+    return (
+        e.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
+        .unionByName(
+            e.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
         .localCheckpoint(eager=True)
     )
 
@@ -1034,13 +980,7 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
     node-scale data per round; the symmetric adjacency is built once
     and checkpointed, never re-derived. Labels frame is checkpointed
     per round (bounded lineage, no recursive plans)."""
-    e = _canon_undirected(edges)
-    adj = (
-        e.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-        .unionByName(
-            e.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-        .localCheckpoint(eager=True)
-    )
+    adj = _sym_adj(edges)
     labels = adj.select("node").distinct().withColumn(
         "community", F.col("node")
     ).localCheckpoint(eager=True)
@@ -1084,28 +1024,36 @@ def bfs_distances(
     frontier); the visited set is node-cardinality. Equivalent to
     `max_hops` rounds of min-relaxation (the oracle's formulation)
     because BFS discovers every node at its minimal hop count."""
-    e = _canon_undirected(edges)
-    adj = (
-        e.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-        .unionByName(
-            e.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-        .localCheckpoint(eager=True)
-    )
+    return _frontier_bfs(edges, seeds, max_hops, ("node",))
+
+
+def _frontier_bfs(
+    edges: DataFrame, seeds: DataFrame, max_hops: int, keys: tuple
+) -> DataFrame:
+    """The frontier-expansion loop behind bfs_distances (keys
+    ``("node",)``) and landmark_distances (keys ``("seed", "node")``):
+    visited(*keys, dist) starts as each non-null seed at dist 0; each
+    round joins only the last frontier against the checkpointed
+    symmetric adjacency, anti-joins the visited set on every key column
+    and checkpoints. Stops at ``max_hops`` or when the frontier empties
+    — the horizon is the contract, so reaching it is not an error."""
+    adj = _sym_adj(edges)
     visited = (
         seeds.select(F.col(seeds.columns[0]).alias("node"))
         .where(F.col("node").isNotNull())
         .distinct()
-        .withColumn("dist", F.lit(0))
+        .select(*[F.col("node").alias(k) for k in keys],
+                F.lit(0).alias("dist"))
         .localCheckpoint(eager=True)
     )
     frontier = visited
     for hop in range(1, max_hops + 1):
         frontier = (
-            frontier.select("node")
+            frontier.select(*keys)
             .join(adj, "node")
-            .select(F.col("nbr").alias("node"))
+            .select(*keys[:-1], F.col("nbr").alias("node"))
             .distinct()
-            .join(visited.select("node"), "node", "left_anti")
+            .join(visited.select(*keys), list(keys), "left_anti")
             .withColumn("dist", F.lit(hop))
             .localCheckpoint(eager=True)
         )
@@ -1226,48 +1174,15 @@ def closeness_terms(
     terms so two engines hash identically (the fixed-point PageRank
     policy).
 
-    Plan: the bfs_distances frontier loop lifted to carry the seed
-    key — visited is (seed, node, dist), each round joins only the
-    last frontier against the checkpointed adjacency and anti-joins
-    visited on (seed, node). Work per round is O(frontier ⋈ edges);
-    exact all-sources closeness is quadratic by nature, so the seed
-    set IS the cap (sampled-pivot closeness — Eppstein-Wang — is the
-    stated estimator at corpus scale, same machinery over O(log n /
-    ε²) sampled seeds)."""
-    e = _canon_undirected(edges)
-    adj = (
-        e.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-        .unionByName(
-            e.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-        .localCheckpoint(eager=True)
-    )
-    visited = (
-        seeds.select(F.col(seeds.columns[0]).alias("seed"))
-        .where(F.col("seed").isNotNull())
-        .distinct()
-        .select("seed", F.col("seed").alias("node"),
-                F.lit(0).alias("dist"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        frontier = (
-            frontier.select("seed", "node")
-            .join(adj, "node")
-            .select("seed", F.col("nbr").alias("node"))
-            .distinct()
-            .join(visited.select("seed", "node"),
-                  ["seed", "node"], "left_anti")
-            .withColumn("dist", F.lit(hop))
-            .localCheckpoint(eager=True)
-        )
-        if frontier.isEmpty():
-            break
-        visited = visited.unionByName(frontier).localCheckpoint(
-            eager=True
-        )
+    Plan: one groupBy over the landmark_distances frame (the shared
+    frontier-BFS loop keyed on (seed, node)). Work per round is
+    O(frontier ⋈ edges); exact all-sources closeness is quadratic by
+    nature, so the seed set IS the cap (sampled-pivot closeness —
+    Eppstein-Wang — is the stated estimator at corpus scale, same
+    machinery over O(log n / ε²) sampled seeds)."""
     return (
-        visited.where(F.col("dist") > 0)
+        landmark_distances(edges, seeds, max_hops)
+        .where(F.col("dist") > 0)
         .groupBy("seed")
         .agg(
             F.count(F.lit(1)).alias("n_reached"),
@@ -1296,13 +1211,7 @@ def deterministic_walks(
     cannot make the argmin ambiguous."""
     from pyspark.sql import Window
 
-    e = _canon_undirected(edges)
-    adj = (
-        e.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-        .unionByName(
-            e.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-        .localCheckpoint(eager=True)
-    )
+    adj = _sym_adj(edges)
     cur = (
         seeds.select(F.col(seeds.columns[0]).alias("seed"))
         .where(F.col("seed").isNotNull())
@@ -1405,13 +1314,11 @@ def markov_stationary(
     unrolled SQL oracle is bit-identical. mass·n stays < 2⁶³ for
     n < 9·10⁶ at the default scale (transition counts, not raw rows).
 
-    Scale design: identical to pagerank — the transition list is the
-    big side (URL-level or state-level chains can be web-sized), hash-
-    partitioned by ``src`` once with rowtot riding along; each step
-    shuffles only the state-cardinality mass frame.
+    Scale design: the :func:`_power_iteration` loop pagerank runs,
+    with every state a seed, d = 100 and so no teleport term
+    ((100·x) DIV 100 = x exactly) — the transition list is the big
+    side (URL-level or state-level chains can be web-sized).
     """
-    spark = trans.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     trans = (
         trans.select("src", "dst", F.col("n").cast("bigint").alias("n"))
         .where(
@@ -1420,65 +1327,10 @@ def markov_stationary(
         )
         .groupBy("src", "dst")
         .agg(F.sum("n").alias("n"))
-        .localCheckpoint(eager=True)
     )
-
-    loop_spark = _clone_session(spark)
-    if loop_spark is not None:
-        loop_spark.conf.set("spark.sql.adaptive.enabled", "false")
-        trans = _rebind(trans, loop_spark)
-        aqe_was = None
-    else:
-        loop_spark = spark
-        aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        rowtot = trans.groupBy("src").agg(F.sum("n").alias("rowtot"))
-        linked = (
-            trans.join(rowtot, "src")
-            .repartition(n_parts, "src")
-            .localCheckpoint(eager=True)
-        )
-        states = (
-            trans.select(F.col("src").alias("state"))
-            .unionByName(trans.select(F.col("dst").alias("state")))
-            .dropDuplicates(["state"])
-            .repartition(n_parts, "state")
-            .localCheckpoint(eager=True)
-        )
-        n_states = states.count()
-        if n_states == 0:
-            return spark.createDataFrame(
-                [], "state string, mass_scaled bigint"
-            )
-        mass = states.withColumn(
-            "mass_scaled", F.lit(scale // n_states).cast("bigint")
-        ).localCheckpoint(eager=True)
-        for _ in range(iterations):
-            inflow = (
-                linked.join(mass, linked["src"] == mass["state"])
-                .select(
-                    F.col("dst"),
-                    F.expr("(mass_scaled * n) DIV rowtot").alias("share"),
-                )
-                .groupBy("dst")
-                .agg(F.sum("share").alias("inflow"))
-            )
-            mass = (
-                states.join(inflow, states["state"] == inflow["dst"], "left")
-                .select(
-                    "state",
-                    F.coalesce("inflow", F.lit(0)).cast("bigint")
-                    .alias("mass_scaled"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        if aqe_was is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-    if mass.sparkSession is not spark:
-        mass = _rebind(mass, spark)
-    return mass
+    return _power_iteration(trans, None, iterations, 100, scale).select(
+        F.col("node").alias("state"), F.col("rank_scaled").alias("mass_scaled")
+    )
 
 
 def square_pairs(edges: DataFrame, min_common: int = 2) -> DataFrame:
@@ -1668,45 +1520,13 @@ def landmark_distances(
     eccentricity estimation à la ANF, crawl-frontier attribution to
     specific entry points).
 
-    Plan: identical frontier expansion to bfs_distances but keyed by
-    (seed, node) — one shared adjacency checkpoint; each round joins
-    only the last frontier against it, anti-joins the visited set on
-    BOTH key columns, checkpoints. Cost is the bfs cost × the (small,
-    explicit) landmark count; landmarks fan out in the same jobs, not
-    sequentially per seed."""
-    e = _canon_undirected(edges)
-    adj = (
-        e.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-        .unionByName(
-            e.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-        .localCheckpoint(eager=True)
-    )
-    visited = (
-        seeds.select(F.col(seeds.columns[0]).alias("seed"))
-        .where(F.col("seed").isNotNull())
-        .distinct()
-        .select(F.col("seed"), F.col("seed").alias("node"))
-        .withColumn("dist", F.lit(0))
-        .localCheckpoint(eager=True)
-    )
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        frontier = (
-            frontier.select("seed", "node")
-            .join(adj, "node")
-            .select("seed", F.col("nbr").alias("node"))
-            .distinct()
-            .join(visited.select("seed", "node"),
-                  ["seed", "node"], "left_anti")
-            .withColumn("dist", F.lit(hop))
-            .localCheckpoint(eager=True)
-        )
-        if frontier.isEmpty():
-            break
-        visited = visited.unionByName(frontier).localCheckpoint(
-            eager=True
-        )
-    return visited
+    Plan: the bfs_distances frontier loop keyed by (seed, node) — one
+    shared adjacency checkpoint; each round joins only the last
+    frontier against it and anti-joins the visited set on BOTH key
+    columns. Cost is the bfs cost × the (small, explicit) landmark
+    count; landmarks fan out in the same jobs, not sequentially per
+    seed."""
+    return _frontier_bfs(edges, seeds, max_hops, ("seed", "node"))
 
 
 def eccentricity_profile(

@@ -367,34 +367,24 @@ def bucketed_join_revenue(
     # keeps its thresholds): at gate scale Catalyst would broadcast
     # the dimension, which is ALSO an exchange — the point here is
     # the bucketed sort-merge join with no exchange at all, the plan
-    # a fact⋈fact join gets at 100 TB where nothing broadcasts.
-    from ..pipeline.cc import _clone_session
+    # a fact⋈fact join gets at 100 TB where nothing broadcasts. The
+    # result stays bound to the clone, so it plans with the same conf
+    # whenever the caller runs it.
+    from ..pipeline.cc import _scoped_session
 
-    sess = _clone_session(spark)
-    restore = None
-    if sess is None:
-        sess = spark
-        restore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    sess.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        o = sess.table("bj_orders")
-        c = sess.table("bj_customer")
-        out = (
-            o.join(c, o["o_custkey"] == c["c_custkey"])
-            .groupBy("c_nationkey")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum("price_c").alias("revenue_cents"),
-            )
+    sess = _scoped_session(
+        spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}
+    )
+    o = sess.table("bj_orders")
+    c = sess.table("bj_customer")
+    return (
+        o.join(c, o["o_custkey"] == c["c_custkey"])
+        .groupBy("c_nationkey")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum("price_c").alias("revenue_cents"),
         )
-        if restore is None:
-            return out
-        return out.localCheckpoint(eager=True)
-    finally:
-        if restore is not None:
-            spark.conf.set(
-                "spark.sql.autoBroadcastJoinThreshold", restore
-            )
+    )
 
 
 def zorder_quantile_codes(

@@ -55,22 +55,28 @@ def _driver_cc(rows) -> list[tuple[str, str]]:
     return [(n, find(n)) for n in parent]
 
 
-def _clone_session(spark):
+def _scoped_session(spark, confs: dict):
     """A sibling SparkSession sharing the SparkContext but with its OWN
     SQL conf (copied from the parent at clone time, runtime-set values
-    included), so per-algorithm conf overrides don't leak into
-    concurrently running jobs on the caller's session.
+    included) and ``confs`` set on top, so per-algorithm conf overrides
+    don't leak into concurrently running jobs on the caller's session.
+    The clone is simply dropped afterwards — nothing to restore.
     ``SparkSession.cloneSession`` is ``private[sql]`` in Scala, which
-    compiles to a public JVM method — callable through the gateway.
-    Returns None when the method is unavailable (caller falls back to a
-    save/restore toggle on the shared session)."""
+    compiles to a public JVM method — callable through the gateway."""
     from pyspark.sql import SparkSession
 
-    try:
-        jclone = spark._jsparkSession.cloneSession()
-        return SparkSession(spark.sparkContext, jclone)
-    except Exception:
-        return None
+    session = SparkSession(
+        spark.sparkContext, spark._jsparkSession.cloneSession()
+    )
+    for key, value in confs.items():
+        session.conf.set(key, value)
+    return session
+
+
+# Iterative loops run with AQE off: its per-stage re-planning barriers
+# add fixed latency to every tiny iterative job and can re-coalesce away
+# the static co-partitioning the loops rely on.
+_AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
 
 
 def _rebind(df: DataFrame, session) -> DataFrame:
@@ -94,13 +100,11 @@ def connected_components(
     connectivity information) — uniformly on both the driver fast path
     and the distributed fixpoint.
 
-    The distributed fixpoint runs with AQE disabled (per-stage
-    re-planning barriers add fixed latency to every tiny iterative job
-    and can re-coalesce away the co-partitioning), scoped PER-PLAN: the
-    loop executes on a cloned SparkSession (shared SparkContext,
-    isolated SQL conf), so concurrent jobs on the caller's session keep
-    AQE. The result is re-homed onto the caller's session before
-    returning.
+    The distributed fixpoint runs with AQE disabled (``_AQE_OFF``),
+    scoped PER-PLAN: the loop executes on a cloned SparkSession (shared
+    SparkContext, isolated SQL conf), so concurrent jobs on the caller's
+    session keep AQE. The result is re-homed onto the caller's session
+    before returning.
     """
     spark = edges.sparkSession
     # Materialize the (narrow) edge list ONCE before the size probe so
@@ -122,79 +126,57 @@ def connected_components(
         ])
         return spark.createDataFrame(_driver_cc(probe), schema)
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Per-plan AQE scoping: run the loop on a cloned session whose conf
-    # override can't affect concurrent jobs. Fallback (no cloneSession in
-    # the runtime): save/restore on the shared session — correct but
-    # session-global for the loop's duration.
-    loop_spark = _clone_session(spark)
-    if loop_spark is not None:
-        loop_spark.conf.set("spark.sql.adaptive.enabled", "false")
-        edges = _rebind(edges, loop_spark).localCheckpoint(eager=True)
-        aqe_was = None
-    else:
-        loop_spark = spark
-        aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    loop_spark = _scoped_session(spark, _AQE_OFF)
+    edges = _rebind(edges, loop_spark).localCheckpoint(eager=True)
     # The edge set is static across iterations: hash-partition it by the
     # join key ONCE (checkpoint preserves the partitioning, SPARK-22905)
     # so each round's join re-shuffles only the (smaller) labels side.
-    # AQE is off inside the loop — its per-stage re-planning barriers
-    # add fixed latency to every tiny iterative job and can re-coalesce
-    # away the co-partitioning.
-    try:
-        # edges is already checkpointed above (shared with the probe);
-        # build the undirected set from the materialized frame — a union
-        # of two selects over a lazy frame would re-run the upstream
-        # scan per branch.
-        und = (
-            edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-            .unionByName(
-                edges.select(F.col("dst").alias("a"), F.col("src").alias("b"))
+    # Built from the materialized frame — a union of two selects over a
+    # lazy frame would re-run the upstream scan per branch.
+    und = (
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        .unionByName(
+            edges.select(F.col("dst").alias("a"), F.col("src").alias("b"))
+        )
+        .dropDuplicates(["a", "b"])
+        .repartition(n_parts, "b")
+        .localCheckpoint(eager=True)
+    )
+    labels = (
+        und.select(F.col("a").alias("node"))
+        .dropDuplicates(["node"])
+        .withColumn("component", F.col("node"))
+        .localCheckpoint(eager=True)
+    )
+    for _ in range(_MAX_ITERS):
+        # one shuffle per round: the old label rides along (tagged)
+        # so change detection is a cheap scan of the checkpointed
+        # result instead of a second join
+        nbr = (
+            und.join(labels, und["b"] == labels["node"])
+            .select(F.col("a").alias("node"), F.col("component"),
+                    F.lit(0).alias("_own"))
+        )
+        own = labels.select("node", "component", F.lit(1).alias("_own"))
+        merged = (
+            own.unionByName(nbr)
+            .groupBy("node")
+            .agg(
+                F.min("component").alias("component"),
+                F.max(F.when(F.col("_own") == 1, F.col("component")))
+                .alias("_old"),
             )
-            .dropDuplicates(["a", "b"])
-            .repartition(n_parts, "b")
             .localCheckpoint(eager=True)
         )
-        labels = (
-            und.select(F.col("a").alias("node"))
-            .dropDuplicates(["node"])
-            .withColumn("component", F.col("node"))
-            .localCheckpoint(eager=True)
+        changed = (
+            merged.where(F.col("component") != F.col("_old")).limit(1).count()
         )
-        for _ in range(_MAX_ITERS):
-            # one shuffle per round: the old label rides along (tagged)
-            # so change detection is a cheap scan of the checkpointed
-            # result instead of a second join
-            nbr = (
-                und.join(labels, und["b"] == labels["node"])
-                .select(F.col("a").alias("node"), F.col("component"),
-                        F.lit(0).alias("_own"))
-            )
-            own = labels.select("node", "component", F.lit(1).alias("_own"))
-            merged = (
-                own.unionByName(nbr)
-                .groupBy("node")
-                .agg(
-                    F.min("component").alias("component"),
-                    F.max(F.when(F.col("_own") == 1, F.col("component")))
-                    .alias("_old"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            changed = (
-                merged.where(F.col("component") != F.col("_old")).limit(1).count()
-            )
-            labels = merged.select("node", "component")
-            if changed == 0:
-                if loop_spark is not spark:
-                    # back across the session boundary; the projection
-                    # reads the checkpointed `merged`, so the rebind is
-                    # one cheap JVM pass over the (small) label set
-                    return _rebind(labels, spark)
-                return labels
-    finally:
-        if aqe_was is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
+        labels = merged.select("node", "component")
+        if changed == 0:
+            # back across the session boundary; the projection reads the
+            # checkpointed `merged`, so the rebind is one cheap JVM pass
+            # over the (small) label set
+            return _rebind(labels, spark)
     raise RuntimeError("connected components did not converge")
 
 

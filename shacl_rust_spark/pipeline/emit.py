@@ -12,11 +12,12 @@ Materialize: parquet partitioned by predicate (`p`) — the same layout
 an Iceberg `writeTo(...).partitionedBy("p").append()` would produce;
 predicate-partitioned scans give partition pruning for triple-pattern
 joins (SURVEY.md §4). Alongside the data:
-  _manifest/commit.json   — input fingerprint + stage metrics
+  _manifest/commit.json   — run fingerprint + stage metrics
                             (the Iceberg snapshot-id stand-in)
   _manifest/partitions.json — per-predicate row counts + content
                             fingerprints (lineage)
-Resume: if commit.json exists with the same input fingerprint the run
+Resume: if commit.json exists with the same fingerprint (inputs,
+replicas, shapes, schema version — see `_fingerprint`) the run
 short-circuits (the "resume from last committed snapshot" contract).
 """
 
@@ -130,8 +131,29 @@ def validate_candidates(
     return valid, violations
 
 
-def _fingerprint(sf_dir: str, n_pages: int) -> str:
-    return f"{os.path.abspath(sf_dir)}:{n_pages}"
+# Bump when a code change alters what the pipeline emits for the same
+# inputs and shapes, so output committed by older code never resumes.
+PIPELINE_SCHEMA_VERSION = 1
+
+
+def _fingerprint(sf_dir: str, replicas: int) -> str:
+    """Identity of everything that produced a run's output: each input
+    file's path, size and footer row count, ``replicas``, the shapes
+    text and the pipeline schema version. Driver-side only — parquet
+    footers, no Spark job and no full-file read."""
+    import hashlib
+
+    import pyarrow.parquet as pq
+
+    h = hashlib.sha256()
+    for name in ("orders", "documents", "nation"):  # what pages.py reads
+        path = os.path.abspath(f"{sf_dir}/{name}.parquet")
+        rows = pq.ParquetFile(path).metadata.num_rows
+        h.update(f"{path}\0{os.path.getsize(path)}\0{rows}\n".encode())
+    h.update(f"replicas={replicas}\n".encode())
+    h.update(f"schema={PIPELINE_SCHEMA_VERSION}\n".encode())
+    h.update(PIPELINE_SHAPES.encode())
+    return h.hexdigest()
 
 
 def parquet_rows(path: str) -> int:

@@ -41,7 +41,7 @@ def run_pipeline(spark, sf_dir: str, out_dir: str, replicas: int = 1) -> dict:
         pq.ParquetFile(f"{sf_dir}/orders.parquet").metadata.num_rows * replicas
         + pq.ParquetFile(f"{sf_dir}/documents.parquet").metadata.num_rows
     )
-    fingerprint = emit._fingerprint(sf_dir, n_pages)
+    fingerprint = emit._fingerprint(sf_dir, replicas)
     prior = emit.read_committed(out_dir, fingerprint)
     if prior is not None:
         prior["resumed"] = True
@@ -53,7 +53,7 @@ def run_pipeline(spark, sf_dir: str, out_dir: str, replicas: int = 1) -> dict:
     resumed_stages: list[str] = []
 
     def scratch_committed(name: str) -> bool:
-        """True when the named scratch snapshot committed for THIS input
+        """True when the named scratch snapshot committed for THIS run
         fingerprint — the stage (and everything upstream of it) can be
         skipped on a restarted run."""
         try:
@@ -232,6 +232,16 @@ def run_pipeline(spark, sf_dir: str, out_dir: str, replicas: int = 1) -> dict:
     return commit
 
 
+def driver_memory() -> str:
+    """Driver heap for a local run: 40 % of the host's MemTotal
+    (/proc/meminfo), capped at 24g, so the JVM fits next to the Python
+    workers on a small host."""
+    with open("/proc/meminfo") as f:
+        kib = next(int(ln.split()[1]) for ln in f
+                   if ln.startswith("MemTotal:"))
+    return f"{max(1, min(24, int(kib * 0.4 / 2**20)))}g"
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
@@ -261,7 +271,8 @@ def main(argv: list[str] | None = None) -> int:
         .appName("kg-construct")
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g" if "cluster" in master else "28g")
+        .config("spark.driver.memory",
+                "8g" if "cluster" in master else driver_memory())
         .config("spark.sql.adaptive.enabled", "true")
         # AQE's partition coalescing shrinks post-shuffle stages to ~10
         # partitions at this data size — a bad makespan at 8+ cores (one

@@ -202,8 +202,6 @@ def test_cc_aqe_scoped_per_plan(spark):
     import threading
     import time
 
-    if cc._clone_session(spark) is None:
-        pytest.skip("SparkSession.cloneSession unavailable in runtime")
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
     # a chain propagates the min label one hop per round, keeping the
@@ -242,6 +240,35 @@ def test_cc_aqe_scoped_per_plan(spark):
     assert result["labels"] == {
         f"n{i:02d}": "n00" for i in range(n + 1)
     }
+
+
+@pytest.mark.parametrize("op", [
+    "pagerank", "personalized_pagerank", "hits", "markov_stationary",
+    "connected_components",
+])
+def test_iterative_op_keeps_caller_session(spark, op):
+    """Every scoped loop runs on its own cloned session: the caller's
+    session stays adaptive and the result is bound back to it."""
+    from shacl_rust_spark.ops import graph
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")],
+        "src string, dst string",
+    )
+    run = {
+        "pagerank": lambda: graph.pagerank(edges),
+        "personalized_pagerank": lambda: graph.personalized_pagerank(
+            edges, spark.createDataFrame([("a",)], "node string")),
+        "hits": lambda: graph.hits(edges),
+        "markov_stationary": lambda: graph.markov_stationary(
+            edges.withColumn("n", F.lit(2))),
+        "connected_components": lambda: cc.connected_components(
+            edges, max_driver_edges=0),
+    }[op]
+    out = run()
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert out.sparkSession is spark
+    assert out.count() == 4
 
 
 def test_validated_emission_drops_unlinked(spark):
@@ -285,6 +312,41 @@ def test_stage_level_resume(spark, tmp_path):
         assert m2[k] == m1[k]
     assert m2["emitted_triples"] == m1["emitted_triples"]
     assert m2["nodes"] == m1["nodes"]
+
+
+def test_resume_fingerprint_covers_shapes(spark, tmp_path, monkeypatch):
+    """Output computed under different shapes never resumes, at the
+    commit level or the stage level; identical inputs still do."""
+    import os
+
+    from shacl_rust_spark.pipeline.run import run_pipeline
+
+    out = str(tmp_path / "kg")
+    first = run_pipeline(spark, SF, out)
+    again = run_pipeline(spark, SF, out)
+    assert again["resumed"]
+    assert again["fingerprint"] == first["fingerprint"]
+
+    # stage level: scratch snapshots from the original shapes remain,
+    # the commit manifest is gone
+    os.remove(f"{out}/_manifest/commit.json")
+    relaxed = emit.PIPELINE_SHAPES.replace(
+        " ;\n                sh:class ex:Nation", "")
+    assert relaxed != emit.PIPELINE_SHAPES
+    monkeypatch.setattr(emit, "PIPELINE_SHAPES", relaxed)
+    changed = run_pipeline(spark, SF, out)
+    assert not changed["resumed"]
+    assert "resumed_stages" not in changed["metrics"]
+    assert changed["metrics"]["violations"] != first["metrics"]["violations"]
+
+    # commit level: the manifest now holds the relaxed shapes' run
+    monkeypatch.undo()
+    back = run_pipeline(spark, SF, out)
+    assert not back["resumed"]
+    assert "resumed_stages" not in back["metrics"]
+    assert back["metrics"]["violations"] == first["metrics"]["violations"]
+    assert (back["metrics"]["emitted_triples"]
+            == first["metrics"]["emitted_triples"])
 
 
 def test_manifest_resume(spark, tmp_path):
