@@ -36,7 +36,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from shacl_rust_spark.pipeline.run import driver_memory
+    from shacl_rust_spark.pipeline.run import driver_memory, warm_up
 
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
     local_dir = tempfile.mkdtemp(prefix="bench_local_", dir=shm)
@@ -53,21 +53,9 @@ def main() -> None:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warm pass: JVM codegen/classloading, Python daemon fork + Arrow,
-    # shuffle + parquet round trip, and the input's parquet footers
-    warm = spark.range(0, 1 << 18, 1, cpus)
-    warm.mapInPandas(lambda it: it, "id: long").count()
-    wdir = tempfile.mkdtemp(prefix="bench_warm_", dir=shm)
-    (
-        warm.select((F.col("id") % 997).alias("k"),
-                    F.col("id").cast("string").alias("v"))
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.sum(F.crc32(F.col("v").cast("binary"))).alias("f"))
-        .write.mode("overwrite").parquet(f"{wdir}/warm")
-    )
-    spark.read.parquet(f"{wdir}/warm").count()
-    shutil.rmtree(wdir, ignore_errors=True)
+    # warm pass (JVM codegen/classloading, Python daemon fork + Arrow,
+    # shuffle + parquet round trip), then the input's parquet footers
+    warm_up(spark)
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 
     def _calibrate() -> float:

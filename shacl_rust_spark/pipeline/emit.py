@@ -1,5 +1,5 @@
-"""Stage 5: SHACL-validated triple emission + partitioned materialize
-with manifest-based resume and per-partition lineage.
+"""Stage 5: SHACL-validated triple emission — the pipeline's one sink
+and its one commit protocol.
 
 Validation: the canonicalized candidate triples (plus the entity
 dictionary's rdf:type triples) become a TERM-struct data graph; the
@@ -8,21 +8,39 @@ ex:locatedIn) runs through the REAL validator engine; violating
 (focus, value) pairs anti-join the candidate set — the
 `triples LEFT ANTI JOIN violations` emission from SURVEY.md §1.4.
 
-Materialize: parquet partitioned by predicate (`p`) — the same layout
-an Iceberg `writeTo(...).partitionedBy("p").append()` would produce;
-predicate-partitioned scans give partition pruning for triple-pattern
-joins (SURVEY.md §4). Alongside the data:
-  _manifest/commit.json   — run fingerprint + stage metrics
-                            (the Iceberg snapshot-id stand-in)
+Layout (`write_triples`, the only writer of the run's output):
+  triples/                  — parquet partitioned by predicate (`p`),
+                              columns s, o, o_is_iri; predicate-partitioned
+                              scans prune for triple-pattern joins
+                              (SURVEY.md §4)
+  nodes/                    — distinct subjects and IRI objects (`node`)
   _manifest/partitions.json — per-predicate row counts + content
-                            fingerprints (lineage)
-Resume: if commit.json exists with the same fingerprint (inputs,
-replicas, shapes, schema version — see `_fingerprint`) the run
-short-circuits (the "resume from last committed snapshot" contract).
+                              fingerprints (lineage)
+  _manifest/commit.json     — run fingerprint + stage metrics
+
+Commit protocol (`_commit` / `_read_marker`; shared by the run
+manifest, run.py's `_scratch/<name>._commit.json` stage snapshots and
+streaming/ingest.py's per-batch manifests): a marker is withdrawn
+BEFORE the data it guards is overwritten and committed AFTER that data
+is complete, through a temp file + `os.replace`. A marker that is
+missing, unreadable or for another fingerprint reads as None, so a
+crashed or torn run recomputes and never resumes output that different
+inputs, shapes or code produced. The fingerprint (`_fingerprint`)
+covers the input files, replicas, the shapes text and
+`PIPELINE_SCHEMA_VERSION`.
+
+Iceberg: when the session conf `spark.shacl.iceberg.catalog` names a
+catalog whose `spark.sql.catalog.<name>` implementation is Iceberg and
+whose class loads (`iceberg_catalog`), triples and nodes go to
+`<catalog>.kg.triples` (partitioned by `p`) and `<catalog>.kg.nodes`
+instead, each stamped with the table property `shacl.fingerprint`; the
+manifest still lands under `_manifest/`, and `read_committed` also
+requires the live table's property to match.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
@@ -183,14 +201,41 @@ def partition_stats(written_triples: DataFrame) -> list[dict]:
     ]
 
 
+def _commit(marker: str, record: dict | list | None) -> None:
+    """The one marker writer. ``None`` withdraws the marker — call it
+    before overwriting the data it guards; a record commits atomically
+    (temp file + ``os.replace``) once that data is complete, so a
+    reader never sees a torn marker."""
+    if record is None:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(marker)
+        return
+    os.makedirs(os.path.dirname(marker), exist_ok=True)
+    with open(f"{marker}.tmp", "w") as f:
+        json.dump(record, f, indent=1)
+    os.replace(f"{marker}.tmp", marker)
+
+
+def _read_marker(marker: str, fingerprint: str | None = None) -> dict | None:
+    """A committed marker, or None when it is missing, unreadable or
+    (given ``fingerprint``) committed for another run."""
+    try:
+        with open(marker) as f:
+            record = json.load(f)
+    except (OSError, ValueError):
+        return None
+    if fingerprint is not None and record.get("fingerprint") != fingerprint:
+        return None
+    return record
+
+
 def write_manifest(
     out_dir: str, fingerprint: str, metrics: dict, part_stats: list[dict],
     t0: float,
 ) -> dict:
-    manifest_dir = f"{out_dir}/_manifest"
-    os.makedirs(manifest_dir, exist_ok=True)
-    with open(f"{manifest_dir}/partitions.json", "w") as f:
-        json.dump(part_stats, f, indent=1)
+    """Commit the run manifest for output already written under
+    ``out_dir`` (lineage first, then ``commit.json``)."""
+    _commit(f"{out_dir}/_manifest/partitions.json", part_stats)
     commit = {
         "fingerprint": fingerprint,
         "committed_at": time.time(),
@@ -198,25 +243,16 @@ def write_manifest(
         "metrics": metrics,
         "partitions": len(part_stats),
     }
-    with open(f"{manifest_dir}/commit.json", "w") as f:
-        json.dump(commit, f, indent=1)
+    _commit(f"{out_dir}/_manifest/commit.json", commit)
     return commit
 
 
-ICEBERG_CATALOG_ENV = "SPARK_GRAFT_ICEBERG_CATALOG"
-
-
 def iceberg_catalog(spark: SparkSession) -> str | None:
-    """Feature flag + runtime detection for a REAL Iceberg sink: returns
-    the catalog name when (a) `SPARK_GRAFT_ICEBERG_CATALOG` (or conf
-    `spark.shacl.iceberg.catalog`) names a catalog, (b) that catalog is
-    configured with an Iceberg implementation, and (c) the Iceberg
-    SparkCatalog class is on the JVM classpath. Any miss → None and the
-    caller takes the parquet+manifest fallback, so the same pipeline
-    binary runs in this jar-less container and on a real deployment."""
-    name = os.environ.get(ICEBERG_CATALOG_ENV) or spark.conf.get(
-        "spark.shacl.iceberg.catalog", None
-    )
+    """The Iceberg catalog the sink writes to, or None for the
+    parquet layout: conf ``spark.shacl.iceberg.catalog`` must name a
+    catalog whose ``spark.sql.catalog.<name>`` implementation is Iceberg
+    and whose SparkCatalog class loads on the JVM."""
+    name = spark.conf.get("spark.shacl.iceberg.catalog", None)
     if not name:
         return None
     impl = spark.conf.get(f"spark.sql.catalog.{name}", "") or ""
@@ -231,113 +267,92 @@ def iceberg_catalog(spark: SparkSession) -> str | None:
     return name
 
 
-def write_triples_iceberg(
-    triples: DataFrame,
-    nodes: DataFrame,
-    catalog: str,
-    fingerprint: str,
-    metrics: dict,
-    namespace: str = "kg",
-) -> dict:
-    """Iceberg-proper materialize: `writeTo(...).partitionedBy("p")`
-    atomic replace + the table's own snapshot id as the resume token
-    (the manifest stand-in's `commit.json` role is played by Iceberg
-    snapshot summary properties here)."""
-    spark = triples.sparkSession
-    t0 = time.time()
-    spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {catalog}.{namespace}")
-    tbl = f"{catalog}.{namespace}.triples"
-    (
-        triples.writeTo(tbl)
-        .partitionedBy("p")
-        .tableProperty("shacl.fingerprint", fingerprint)
-        .createOrReplace()
-    )
-    (
-        nodes.writeTo(f"{catalog}.{namespace}.nodes")
-        .tableProperty("shacl.fingerprint", fingerprint)
-        .createOrReplace()
-    )
-    snap = spark.sql(
-        f"SELECT snapshot_id FROM {tbl}.snapshots "
-        "ORDER BY committed_at DESC LIMIT 1"
-    ).collect()[0][0]
-    part_stats = partition_stats(spark.table(tbl))
-    return {
-        "backend": "iceberg",
-        "table": tbl,
-        "snapshot_id": snap,
-        "fingerprint": fingerprint,
-        "committed_at": time.time(),
-        "write_secs": round(time.time() - t0, 3),
-        "metrics": metrics,
-        "partitions": len(part_stats),
-        "partition_stats": part_stats,
-    }
-
-
-def read_committed_iceberg(
-    spark: SparkSession, catalog: str, fingerprint: str, namespace: str = "kg"
-) -> dict | None:
-    """Resume check against the live Iceberg table: fingerprint property
-    must match AND the current snapshot must still exist."""
-    tbl = f"{catalog}.{namespace}.triples"
-    try:
-        props = {
-            r["key"]: r["value"]
-            for r in spark.sql(f"SHOW TBLPROPERTIES {tbl}").collect()
-        }
-    except Exception:  # noqa: BLE001 — table absent
-        return None
-    if props.get("shacl.fingerprint") != fingerprint:
-        return None
-    snaps = spark.sql(f"SELECT snapshot_id FROM {tbl}.snapshots").collect()
-    if not snaps:
-        return None
-    return {"backend": "iceberg", "table": tbl, "fingerprint": fingerprint}
-
-
 def write_triples(
-    triples: DataFrame,
-    nodes: DataFrame,
-    out_dir: str,
-    fingerprint: str,
-    metrics: dict,
-    backend: str = "auto",
+    valid: DataFrame, out_dir: str, fingerprint: str, metrics: dict,
+    t0: float,
 ) -> dict:
-    """Partitioned materialize + manifest commit. Returns the manifest.
+    """The pipeline's one sink: the valid triples (one partitioned
+    write), their nodes, lineage stats, footer row counts and the
+    manifest. Fills ``metrics`` (emitted_triples, nodes, the emit and
+    finalize phases, wall_secs, triples_per_sec; plus the table and
+    snapshot id under ``iceberg``) and returns the committed manifest.
+    ``t0`` is the run's start time."""
+    from concurrent.futures import ThreadPoolExecutor
 
-    backend: "auto" uses Iceberg when `iceberg_catalog()` resolves,
-    else the parquet+manifest stand-in; "parquet"/"iceberg" force."""
-    spark = triples.sparkSession
-    if backend in ("auto", "iceberg"):
-        cat = iceberg_catalog(spark)
-        if cat is not None:
-            return write_triples_iceberg(
-                triples, nodes, cat, fingerprint, metrics
-            )
-        if backend == "iceberg":
-            raise RuntimeError(
-                "iceberg backend requested but no Iceberg catalog is "
-                f"configured (set ${ICEBERG_CATALOG_ENV} and add the "
-                "iceberg-spark-runtime jar)"
-            )
-    t0 = time.time()
-    (
-        triples.write.mode("overwrite")
-        .partitionBy("p")
-        .parquet(f"{out_dir}/triples")
+    spark = valid.sparkSession
+    catalog = iceberg_catalog(spark)
+    phases = metrics.setdefault("phases", {})
+    _commit(f"{out_dir}/_manifest/commit.json", None)
+
+    def write(df: DataFrame, name: str, partition_by: str | None = None):
+        """Overwrite one output table; → (reader, row count)."""
+        if catalog is None:
+            path = f"{out_dir}/{name}"
+            w = df.write.mode("overwrite")
+            if partition_by:
+                w = w.partitionBy(partition_by)
+            w.parquet(path)
+            return spark.read.parquet(path), parquet_rows(path)
+        tbl = f"{catalog}.kg.{name}"
+        w = df.writeTo(tbl).tableProperty("shacl.fingerprint", fingerprint)
+        if partition_by:
+            w = w.partitionedBy(F.col(partition_by))
+        w.createOrReplace()
+        snap, rows = spark.sql(
+            f"SELECT snapshot_id, summary['total-records'] FROM "
+            f"{tbl}.snapshots ORDER BY committed_at DESC LIMIT 1"
+        ).collect()[0]
+        if name == "triples":
+            metrics["iceberg"] = {"table": tbl, "snapshot_id": snap}
+        return spark.table(tbl), int(rows)
+
+    t = time.time()
+    if catalog is not None:
+        spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {catalog}.kg")
+    written, metrics["emitted_triples"] = write(
+        valid.select("s", "p", "o", "o_is_iri"), "triples", partition_by="p"
     )
-    nodes.write.mode("overwrite").parquet(f"{out_dir}/nodes")
-    part_stats = partition_stats(spark.read.parquet(f"{out_dir}/triples"))
+    phases["emit"] = round(time.time() - t, 2)
+
+    # nodes and lineage stats both scan the (small, compressed) written
+    # output — independent actions, run concurrently
+    t = time.time()
+    nodes = written.select(
+        F.explode(F.array_compact(F.array(
+            F.col("s"), F.when(F.col("o_is_iri"), F.col("o"))
+        ))).alias("node")
+    ).dropDuplicates(["node"])
+    with ThreadPoolExecutor(2) as pool:
+        f_nodes = pool.submit(write, nodes, "nodes")
+        f_stats = pool.submit(partition_stats, written)
+        metrics["nodes"] = f_nodes.result()[1]
+        part_stats = f_stats.result()
+    phases["finalize"] = round(time.time() - t, 2)
+
+    metrics["wall_secs"] = round(time.time() - t0, 3)
+    metrics["triples_per_sec"] = round(
+        metrics["emitted_triples"] / max(metrics["wall_secs"], 1e-9), 1
+    )
     return write_manifest(out_dir, fingerprint, metrics, part_stats, t0)
 
 
-def read_committed(out_dir: str, fingerprint: str) -> dict | None:
-    """Resume check: manifest with a matching input fingerprint."""
-    path = f"{out_dir}/_manifest/commit.json"
-    if not os.path.exists(path):
+def read_committed(
+    spark: SparkSession, out_dir: str, fingerprint: str
+) -> dict | None:
+    """The one resume check: the manifest committed for ``fingerprint``,
+    or None. With an Iceberg catalog the live triples table's
+    ``shacl.fingerprint`` property must match too, so a dropped or
+    since-replaced table never resumes."""
+    commit = _read_marker(f"{out_dir}/_manifest/commit.json", fingerprint)
+    catalog = iceberg_catalog(spark)
+    if commit is None or catalog is None:
+        return commit
+    from pyspark.errors import AnalysisException
+
+    try:
+        props = dict(
+            spark.sql(f"SHOW TBLPROPERTIES {catalog}.kg.triples").collect()
+        )
+    except AnalysisException:  # table absent
         return None
-    with open(path) as f:
-        commit = json.load(f)
-    return commit if commit.get("fingerprint") == fingerprint else None
+    return commit if props.get("shacl.fingerprint") == fingerprint else None

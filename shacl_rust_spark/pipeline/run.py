@@ -42,7 +42,7 @@ def run_pipeline(spark, sf_dir: str, out_dir: str, replicas: int = 1) -> dict:
         + pq.ParquetFile(f"{sf_dir}/documents.parquet").metadata.num_rows
     )
     fingerprint = emit._fingerprint(sf_dir, replicas)
-    prior = emit.read_committed(out_dir, fingerprint)
+    prior = emit.read_committed(spark, out_dir, fingerprint)
     if prior is not None:
         prior["resumed"] = True
         return prior
@@ -52,15 +52,12 @@ def run_pipeline(spark, sf_dir: str, out_dir: str, replicas: int = 1) -> dict:
 
     resumed_stages: list[str] = []
 
-    def scratch_committed(name: str) -> bool:
-        """True when the named scratch snapshot committed for THIS run
-        fingerprint — the stage (and everything upstream of it) can be
-        skipped on a restarted run."""
-        try:
-            with open(f"{out_dir}/_scratch/{name}._commit.json") as f:
-                return json.load(f).get("fingerprint") == fingerprint
-        except (OSError, ValueError):
-            return False
+    def scratch_committed(name: str) -> dict | None:
+        """The named scratch snapshot's marker when it committed for
+        THIS run fingerprint — the stage (and everything upstream of
+        it) can be skipped on a restarted run."""
+        return emit._read_marker(
+            f"{out_dir}/_scratch/{name}._commit.json", fingerprint)
 
     def scratch(df, name: str, partition_by: str | None = None):
         """Materialize an intermediate as compressed columnar scratch
@@ -70,28 +67,27 @@ def run_pipeline(spark, sf_dir: str, out_dir: str, replicas: int = 1) -> dict:
         block-location-free scans (no cross-executor cache fetches),
         and a free exact row count from the footers.
 
-        Each scratch table is a committed stage snapshot: a fingerprint
-        marker written AFTER the parquet commit makes the stage
-        resumable — a restarted run with the same input skips every
-        stage whose snapshot already committed (the Iceberg
-        "resume from last committed snapshot" contract at stage
-        granularity; partial writes have no marker and recompute)."""
+        Each scratch table is a committed stage snapshot under emit's
+        commit protocol: its marker is withdrawn before the overwrite
+        and committed after it, so a restarted run with the same
+        fingerprint skips every stage whose snapshot committed, and a
+        partial or foreign write recomputes."""
         path = f"{out_dir}/_scratch/{name}"
-        if scratch_committed(name):
+        prior = scratch_committed(name)
+        if prior is not None:
             resumed_stages.append(name)
-            with open(f"{path}._commit.json") as f:
-                # stage metrics captured at original commit time —
-                # restores counters for the skipped upstream stages
-                metrics.update(json.load(f).get("metrics", {}))
+            # stage metrics captured at original commit time —
+            # restores counters for the skipped upstream stages
+            metrics.update(prior.get("metrics", {}))
             return spark.read.parquet(path)
+        emit._commit(f"{path}._commit.json", None)
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(partition_by)
         w.parquet(path)
-        with open(f"{path}._commit.json", "w") as f:
-            json.dump({"fingerprint": fingerprint,
-                       "committed_at": time.time(),
-                       "metrics": dict(metrics)}, f)
+        emit._commit(f"{path}._commit.json", {
+            "fingerprint": fingerprint, "committed_at": time.time(),
+            "metrics": dict(metrics)})
         return spark.read.parquet(path)
 
     extracted = extract.extract_text(pg)
@@ -102,7 +98,7 @@ def run_pipeline(spark, sf_dir: str, out_dir: str, replicas: int = 1) -> dict:
     edict = pages.entity_dict(spark, sf_dir)
     from concurrent.futures import ThreadPoolExecutor
 
-    if scratch_committed("candidates"):
+    if scratch_committed("candidates") is not None:
         # restarted run: the canonicalized-candidates snapshot covers
         # every upstream stage (extract → link → CC → canonicalize);
         # skip their recomputation entirely — counters come from the
@@ -185,49 +181,10 @@ def run_pipeline(spark, sf_dir: str, out_dir: str, replicas: int = 1) -> dict:
     metrics["violations"] = violations.count()
     mark("validate")
 
-    # Emit = ONE pass over the candidates (anti-join + partitioned
-    # write); the emitted count comes from the written parquet footers —
-    # no second count pass, no checkpoint of the valid set.
-    (
-        valid.select("s", "p", "o", "o_is_iri")
-        .write.mode("overwrite").partitionBy("p")
-        .parquet(f"{out_dir}/triples")
-    )
-    metrics["emitted_triples"] = emit.parquet_rows(f"{out_dir}/triples")
-    mark("emit")
-
-    # finalize: nodes write and lineage stats both scan the (small,
-    # compressed) written output — independent actions, run concurrently
-    written = spark.read.parquet(f"{out_dir}/triples")
-    nodes = (
-        written.select(
-            F.explode(
-                F.array_compact(
-                    F.array(F.col("s"),
-                            F.when(F.col("o_is_iri"), F.col("o")))
-                )
-            ).alias("node")
-        )
-        .dropDuplicates(["node"])
-    )
-    with ThreadPoolExecutor(2) as pool:
-        f_nodes = pool.submit(
-            lambda: nodes.write.mode("overwrite").parquet(f"{out_dir}/nodes")
-        )
-        f_stats = pool.submit(emit.partition_stats, written)
-        f_nodes.result()
-        part_stats = f_stats.result()
-    metrics["nodes"] = emit.parquet_rows(f"{out_dir}/nodes")
-    mark("finalize")
-
     if resumed_stages:
         metrics["resumed_stages"] = resumed_stages
     metrics["phases"] = phases
-    metrics["wall_secs"] = round(time.time() - t0, 3)
-    metrics["triples_per_sec"] = round(
-        metrics["emitted_triples"] / max(metrics["wall_secs"], 1e-9), 1
-    )
-    commit = emit.write_manifest(out_dir, fingerprint, metrics, part_stats, t0)
+    commit = emit.write_triples(valid, out_dir, fingerprint, metrics, t0)
     commit["resumed"] = False
     return commit
 
@@ -240,6 +197,36 @@ def driver_memory() -> str:
         kib = next(int(ln.split()[1]) for ln in f
                    if ln.startswith("MemTotal:"))
     return f"{max(1, min(24, int(kib * 0.4 / 2**20)))}g"
+
+
+def warm_up(spark) -> None:
+    """Pay one-time provisioning before a measured window: executor
+    registration, Python-worker fork + pandas/pyarrow imports
+    (mapInPandas), shuffle write/read (groupBy), parquet encode/decode
+    and first-job classloading. A long-running job amortizes these to
+    zero; inside a short benchmark window they would measure cluster
+    spin-up, not pipeline throughput. 64 partitions reach every
+    executor of the clusters the scaling harness starts."""
+    import shutil
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    warm = spark.range(0, 1 << 18, 1, 64)
+    warm.mapInPandas(lambda it: it, "id: long").count()
+    wdir = tempfile.mkdtemp(prefix="kg_warm_")
+    try:
+        (
+            warm.select((F.col("id") % 997).alias("k"),
+                        F.col("id").cast("string").alias("v"))
+            .groupBy("k")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.sum(F.crc32(F.col("v").cast("binary"))).alias("f"))
+            .write.mode("overwrite").parquet(f"{wdir}/warm")
+        )
+        spark.read.parquet(f"{wdir}/warm").count()
+    finally:
+        shutil.rmtree(wdir, ignore_errors=True)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -313,33 +300,7 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     if os.environ.get("KG_WARM_CLUSTER"):
-        # Warm the cluster before the measured window: executor
-        # registration, Python daemon fork + pandas/pyarrow imports, and
-        # first-job classloading are one-time PROVISIONING costs that a
-        # long-running production job amortizes to zero; paying them
-        # inside a short benchmark window would measure cluster spin-up,
-        # not pipeline throughput. Identical at every cluster size.
-        # exercise every expensive engine path once per executor:
-        # Python-worker fork + Arrow (mapInPandas), shuffle write/read
-        # (groupBy), and parquet encode/decode — so their JVM/JIT and
-        # worker setup costs land in the warm window on every executor.
-        import tempfile as _tf
-
-        from pyspark.sql import functions as _F
-        warm = spark.range(0, 1 << 18, 1, 64)
-        warm.mapInPandas(lambda it: it, "id: long").count()
-        wdir = _tf.mkdtemp(prefix="kg_warm_")
-        (
-            warm.select((_F.col("id") % 997).alias("k"),
-                        _F.col("id").cast("string").alias("v"))
-            .groupBy("k")
-            .agg(_F.count(_F.lit(1)).alias("n"),
-                 _F.sum(_F.crc32(_F.col("v").cast("binary"))).alias("f"))
-            .write.mode("overwrite").parquet(f"{wdir}/warm")
-        )
-        spark.read.parquet(f"{wdir}/warm").count()
-        import shutil as _sh
-        _sh.rmtree(wdir, ignore_errors=True)
+        warm_up(spark)
 
     if "cluster" in master:
         # multi-executor run: ship the package to executors the same way

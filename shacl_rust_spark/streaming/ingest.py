@@ -14,8 +14,10 @@ triple sink with per-batch lineage. This module is that path:
   guarantees each input file is assigned to exactly one batch_id
   forever; on top, the write side is idempotent per batch — triples
   land under `batches/batch_id=N/` with mode("overwrite") and the
-  lineage manifest is one atomic `_manifests/batch-N.json` per batch,
-  so a batch replayed after a mid-write crash overwrites only ITSELF.
+  lineage manifest is one `_manifests/batch-N.json` per batch under
+  pipeline/emit.py's commit protocol (withdrawn before the overwrite,
+  committed atomically after it), so a batch replayed after a
+  mid-write crash overwrites only ITSELF.
 - Canonicalization (sameAs connected components) is deliberately NOT
   per-batch: CC is a global fixpoint over all edges ever seen, so the
   periodic batch job owns it and reads this sink as its input — the
@@ -25,7 +27,6 @@ triple sink with per-batch lineage. This module is that path:
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -40,7 +41,7 @@ def process_pages_batch(
     batch_df: DataFrame, batch_id: int, entity_dict: DataFrame, out_dir: str
 ) -> dict:
     """One micro-batch through the batch-grade stages; returns the
-    batch's lineage manifest (also written atomically to
+    batch's lineage manifest (also committed to
     `_manifests/batch-{id}.json`)."""
     from ..pipeline import assemble, emit, extract, link
 
@@ -57,24 +58,19 @@ def process_pages_batch(
     valid, violations = emit.validate_candidates(spark, cand, entity_dict)
 
     batch_dir = f"{out_dir}/batches/batch_id={batch_id}"
+    marker = f"{out_dir}/_manifests/batch-{batch_id}.json"
+    emit._commit(marker, None)  # a replay first withdraws its manifest
     valid.select("s", "p", "o").write.mode("overwrite").partitionBy(
         "p"
     ).parquet(batch_dir)
-    n_rows = emit.parquet_rows(batch_dir)
-
     manifest = {
         "batch_id": batch_id,
-        "triples": n_rows,
+        "triples": emit.parquet_rows(batch_dir),
         "violations": violations.count(),
         "committed_at": time.time(),
         "write_secs": round(time.time() - t0, 3),
     }
-    mdir = f"{out_dir}/_manifests"
-    os.makedirs(mdir, exist_ok=True)
-    tmp = f"{mdir}/.batch-{batch_id}.json.tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, f"{mdir}/batch-{batch_id}.json")  # atomic commit
+    emit._commit(marker, manifest)
     return manifest
 
 
@@ -133,12 +129,13 @@ def read_ingested(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def read_manifests(out_dir: str) -> list[dict]:
+    """The committed batch manifests, in batch order."""
+    from ..pipeline.emit import _read_marker
+
     mdir = f"{out_dir}/_manifests"
     if not os.path.isdir(mdir):
         return []
-    out = []
-    for name in sorted(os.listdir(mdir)):
-        if name.startswith("batch-") and name.endswith(".json"):
-            with open(f"{mdir}/{name}") as f:
-                out.append(json.load(f))
-    return sorted(out, key=lambda m: m["batch_id"])
+    found = (_read_marker(f"{mdir}/{name}") for name in os.listdir(mdir)
+             if name.startswith("batch-") and name.endswith(".json"))
+    return sorted((m for m in found if m is not None),
+                  key=lambda m: m["batch_id"])

@@ -314,87 +314,223 @@ def test_stage_level_resume(spark, tmp_path):
     assert m2["nodes"] == m1["nodes"]
 
 
-def test_resume_fingerprint_covers_shapes(spark, tmp_path, monkeypatch):
-    """Output computed under different shapes never resumes, at the
-    commit level or the stage level; identical inputs still do."""
+@pytest.mark.parametrize("change", ["shapes", "input"])
+def test_resume_fingerprint_covers_shapes(spark, tmp_path, monkeypatch,
+                                          change):
+    """Output computed under different shapes or from different input
+    never resumes, at the commit level or the stage level; identical
+    inputs still do."""
     import os
+    import shutil
+
+    import pyarrow.parquet as pq
 
     from shacl_rust_spark.pipeline.run import run_pipeline
 
+    sf = SF
+    if change == "input":
+        sf = str(tmp_path / "sf")
+        os.makedirs(sf)
+        for name in ("orders", "documents", "nation"):
+            shutil.copy(f"{SF}/{name}.parquet", sf)
     out = str(tmp_path / "kg")
-    first = run_pipeline(spark, SF, out)
-    again = run_pipeline(spark, SF, out)
+    first = run_pipeline(spark, sf, out)
+    again = run_pipeline(spark, sf, out)
     assert again["resumed"]
     assert again["fingerprint"] == first["fingerprint"]
 
-    # stage level: scratch snapshots from the original shapes remain,
+    # stage level: scratch snapshots from the original run remain,
     # the commit manifest is gone
     os.remove(f"{out}/_manifest/commit.json")
-    relaxed = emit.PIPELINE_SHAPES.replace(
-        " ;\n                sh:class ex:Nation", "")
-    assert relaxed != emit.PIPELINE_SHAPES
-    monkeypatch.setattr(emit, "PIPELINE_SHAPES", relaxed)
-    changed = run_pipeline(spark, SF, out)
+    if change == "shapes":
+        relaxed = emit.PIPELINE_SHAPES.replace(
+            " ;\n                sh:class ex:Nation", "")
+        assert relaxed != emit.PIPELINE_SHAPES
+        monkeypatch.setattr(emit, "PIPELINE_SHAPES", relaxed)
+    else:
+        nation = f"{sf}/nation.parquet"
+        pq.write_table(pq.read_table(nation).slice(1), nation)
+    changed = run_pipeline(spark, sf, out)
     assert not changed["resumed"]
     assert "resumed_stages" not in changed["metrics"]
-    assert changed["metrics"]["violations"] != first["metrics"]["violations"]
+    assert changed["fingerprint"] != first["fingerprint"]
+    if change == "shapes":
+        assert (changed["metrics"]["violations"]
+                != first["metrics"]["violations"])
 
-    # commit level: the manifest now holds the relaxed shapes' run
-    monkeypatch.undo()
-    back = run_pipeline(spark, SF, out)
+    # commit level: the manifest now holds the changed run
+    if change == "shapes":
+        monkeypatch.undo()
+    else:
+        shutil.copy(f"{SF}/nation.parquet", sf)
+    back = run_pipeline(spark, sf, out)
     assert not back["resumed"]
     assert "resumed_stages" not in back["metrics"]
+    assert back["fingerprint"] == first["fingerprint"]
     assert back["metrics"]["violations"] == first["metrics"]["violations"]
     assert (back["metrics"]["emitted_triples"]
             == first["metrics"]["emitted_triples"])
 
 
+def test_crashed_run_never_resumes_stale_output(spark, tmp_path, monkeypatch):
+    """A run that dies after overwriting triples/ but before its manifest
+    commits leaves no manifest behind: rerunning the earlier, committed
+    run recomputes, and its manifest counts what is on disk."""
+    from shacl_rust_spark.pipeline.run import run_pipeline
+
+    out = str(tmp_path / "kg")
+    first = run_pipeline(spark, SF, out)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash before the manifest")
+
+    with monkeypatch.context() as m:
+        m.setattr(emit, "PIPELINE_SHAPES", emit.PIPELINE_SHAPES.replace(
+            "sh:minCount 1", "sh:maxCount 0"))
+        m.setattr(emit, "write_manifest", crash)
+        with pytest.raises(RuntimeError, match="crash before the manifest"):
+            run_pipeline(spark, SF, out)
+    rerun = run_pipeline(spark, SF, out)
+    assert not rerun["resumed"]
+    assert (emit.parquet_rows(f"{out}/triples")
+            == rerun["metrics"]["emitted_triples"]
+            == first["metrics"]["emitted_triples"])
+
+
+def test_torn_marker_recomputes(spark, tmp_path):
+    """A truncated run manifest or stage marker reads as uncommitted:
+    the rerun succeeds, recomputes from the last intact snapshot and
+    emits what the first run did."""
+    import os
+
+    from shacl_rust_spark.pipeline.run import run_pipeline
+
+    def tear(path):
+        with open(path, "r+") as f:
+            f.truncate(os.path.getsize(path) // 2)
+
+    out = str(tmp_path / "kg")
+    n = run_pipeline(spark, SF, out)["metrics"]["emitted_triples"]
+
+    tear(f"{out}/_manifest/commit.json")
+    second = run_pipeline(spark, SF, out)
+    assert not second["resumed"]
+    assert second["metrics"]["resumed_stages"] == ["mentions", "candidates"]
+    assert second["metrics"]["emitted_triples"] == n
+
+    tear(f"{out}/_manifest/commit.json")
+    tear(f"{out}/_scratch/candidates._commit.json")
+    third = run_pipeline(spark, SF, out)
+    assert not third["resumed"]
+    assert third["metrics"]["resumed_stages"] == ["mentions", "linked"]
+    assert third["metrics"]["emitted_triples"] == n
+
+
 def test_manifest_resume(spark, tmp_path):
+    import time
+
     out = str(tmp_path / "kg")
     t = spark.createDataFrame(
         [("s1", "p1", "o1", True)], ["s", "p", "o", "o_is_iri"]
     )
-    n = spark.createDataFrame([("s1",)], ["node"])
-    emit.write_triples(t, n, out, "fp:42", {"emitted_triples": 1})
-    assert emit.read_committed(out, "fp:42") is not None
-    assert emit.read_committed(out, "fp:other") is None
+    commit = emit.write_triples(t, out, "fp:42", {}, time.time())
+    assert commit["metrics"]["emitted_triples"] == 1
+    assert commit["metrics"]["nodes"] == 2  # s1 and the IRI object o1
+    assert emit.read_committed(spark, out, "fp:42") is not None
+    assert emit.read_committed(spark, out, "fp:other") is None
     with open(f"{out}/_manifest/partitions.json") as f:
         parts = json.load(f)
     assert parts and parts[0]["rows"] == 1
 
 
-def test_iceberg_flag_detection_and_fallback(spark, tmp_path, monkeypatch):
-    """In this jar-less container iceberg_catalog() must resolve to None
-    at every gate (unset flag / flag without catalog conf), and the
-    auto backend must take the parquet+manifest fallback."""
-    monkeypatch.delenv(emit.ICEBERG_CATALOG_ENV, raising=False)
-    assert emit.iceberg_catalog(spark) is None
-    monkeypatch.setenv(emit.ICEBERG_CATALOG_ENV, "icy")
-    assert emit.iceberg_catalog(spark) is None  # no spark.sql.catalog.icy
-    out = str(tmp_path / "kg")
-    t = spark.createDataFrame(
-        [("s1", "p1", "o1", True)], ["s", "p", "o", "o_is_iri"]
-    )
-    n = spark.createDataFrame([("s1",)], ["node"])
-    commit = emit.write_triples(t, n, out, "fp:ice", {}, backend="auto")
-    assert "backend" not in commit  # parquet manifest shape
-    assert emit.read_committed(out, "fp:ice") is not None
-    with pytest.raises(RuntimeError, match="iceberg backend requested"):
-        emit.write_triples(t, n, out, "fp:ice", {}, backend="iceberg")
+def test_iceberg_flag_detection_and_fallback(spark, tmp_path):
+    """iceberg_catalog() resolves to None when the conf is unset and
+    when it names a catalog that is not configured, and the sink then
+    writes the parquet layout."""
+    import time
+
+    key = "spark.shacl.iceberg.catalog"
+    prior = spark.conf.get(key, None)
+    try:
+        spark.conf.unset(key)
+        assert emit.iceberg_catalog(spark) is None
+        spark.conf.set(key, "icy")
+        assert emit.iceberg_catalog(spark) is None  # no spark.sql.catalog.icy
+        out = str(tmp_path / "kg")
+        t = spark.createDataFrame(
+            [("s1", "p1", "o1", True)], ["s", "p", "o", "o_is_iri"]
+        )
+        commit = emit.write_triples(t, out, "fp:ice", {}, time.time())
+        assert "iceberg" not in commit["metrics"]
+        assert emit.parquet_rows(f"{out}/triples") == 1
+        assert emit.read_committed(spark, out, "fp:ice") is not None
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
 
 
 def test_iceberg_backend_roundtrip(spark, tmp_path):
-    """Real-deployment path: writeTo().partitionedBy + snapshot resume.
-    Runs only where an Iceberg catalog is actually configured."""
+    """The sink's Iceberg branch against a live catalog: detection,
+    partitioned write + snapshot id, resume hit and miss, snapshot
+    advance + time travel, no resume after the table is dropped, and
+    partition pruning. Skips unless the session has an Iceberg catalog;
+    to run it, put the runtime jar and a catalog on the test JVM:
+
+        PYSPARK_SUBMIT_ARGS="--jars iceberg-spark-runtime-3.5_2.12.jar \
+          --conf spark.sql.catalog.local=org.apache.iceberg.spark.SparkCatalog \
+          --conf spark.sql.catalog.local.type=hadoop \
+          --conf spark.sql.catalog.local.warehouse=/tmp/iceberg_warehouse \
+          --conf spark.shacl.iceberg.catalog=local \
+          --driver-memory 8g pyspark-shell" \
+        python -m pytest tests/test_pipeline.py -k iceberg_backend_roundtrip
+    """
+    import io
+    import time
+    from contextlib import redirect_stdout
+
     cat = emit.iceberg_catalog(spark)
     if cat is None:
         pytest.skip("no Iceberg catalog configured in this runtime")
+    out = str(tmp_path / "kg")
     t = spark.createDataFrame(
-        [("s1", "p1", "o1", True)], ["s", "p", "o", "o_is_iri"]
+        [("s1", "p1", "o1", True), ("s2", "p2", "o2", True),
+         ("s3", "p1", "o3", False)],
+        ["s", "p", "o", "o_is_iri"],
     )
-    n = spark.createDataFrame([("s1",)], ["node"])
-    commit = emit.write_triples(t, n, str(tmp_path), "fp:ice", {},
-                                backend="iceberg")
-    assert commit["backend"] == "iceberg" and commit["snapshot_id"]
-    assert emit.read_committed_iceberg(spark, cat, "fp:ice") is not None
-    assert emit.read_committed_iceberg(spark, cat, "fp:other") is None
+
+    # partitioned write with a live snapshot id
+    c1 = emit.write_triples(t, out, "fp:a", {}, time.time())
+    ice1 = c1["metrics"]["iceberg"]
+    tbl = ice1["table"]
+    assert tbl == f"{cat}.kg.triples" and ice1["snapshot_id"]
+    assert c1["partitions"] == 2 and c1["metrics"]["emitted_triples"] == 3
+    assert spark.table(tbl).count() == 3
+    assert spark.table(f"{cat}.kg.nodes").count() == c1["metrics"]["nodes"] == 5
+    assert spark.sql(f"SELECT * FROM {tbl}.partitions").count() == 2
+
+    # resume hit / miss
+    assert emit.read_committed(spark, out, "fp:a") is not None
+    assert emit.read_committed(spark, out, "fp:OTHER") is None
+
+    # snapshot advance; time travel still reads the first snapshot
+    t2 = t.unionByName(spark.createDataFrame(
+        [("s4", "p3", "o4", True)], ["s", "p", "o", "o_is_iri"]))
+    c2 = emit.write_triples(t2, out, "fp:b", {}, time.time())
+    assert c2["metrics"]["iceberg"]["snapshot_id"] != ice1["snapshot_id"]
+    assert spark.sql(
+        f"SELECT count(*) FROM {tbl} VERSION AS OF {ice1['snapshot_id']}"
+    ).collect()[0][0] == 3
+
+    # a resume never outlives the table it names
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    assert emit.read_committed(spark, out, "fp:b") is None
+
+    # a single-predicate read pushes its filter into the Iceberg scan
+    emit.write_triples(t2, out, "fp:c", {}, time.time())
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        spark.table(tbl).where("p = 'p1'").explain(True)
+    plan = buf.getvalue()
+    assert "p1" in plan and ("filters=" in plan or "Filter" in plan)
