@@ -163,11 +163,9 @@ def _validate_command(args) -> int:
         rendered = json.dumps(report.to_json(), indent=2)
     else:
         from .rdf import serialize_graph
-        from .schema import df_to_triples
 
-        g = Graph(df_to_triples(report.to_graph_df()))
         try:
-            rendered = serialize_graph(g, args.output_format)
+            rendered = serialize_graph(report.to_graph(), args.output_format)
         except ValueError:
             # main.rs:353-358 — from_extension failure (note: the
             # reference lists yaml as supported here but rejects it too)

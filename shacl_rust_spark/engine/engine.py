@@ -321,30 +321,32 @@ class Validator:
 
 
 class Report:
-    """Spark analog of ValidationReport (src/validation/report.rs:10-16)."""
+    """Spark analog of ValidationReport (src/validation/report.rs:10-16).
+
+    ``violations`` is the lazy violations DataFrame; ``results()``
+    collects it once and caches the rows. ``conforms`` means no results
+    (as in the reference), and every sink — JSON, text, RDF graph —
+    renders from the cached rows, so the plan executes once per report.
+    """
 
     def __init__(self, violations: DataFrame):
         self.violations = violations
-        self._conforms: bool | None = None
+        self._rows: list | None = None
+
+    def results(self) -> list:
+        if self._rows is None:
+            self._rows = self.violations.collect()
+        return self._rows
 
     @property
     def conforms(self) -> bool:
-        if self._conforms is None:
-            self._conforms = self.violations.isEmpty()
-        return self._conforms
+        return not self.results()
 
-    def results(self) -> list:
-        return self.violations.collect()
+    def to_graph(self) -> Graph:
+        """sh:ValidationReport vocabulary as a Graph (report.rs:100-217)."""
+        from .report import report_graph
 
-    def to_json_rows(self) -> list[dict]:
-        return [r.asDict(recursive=True) for r in self.results()]
-
-    def to_graph_df(self) -> DataFrame:
-        """sh:ValidationReport vocabulary as a triples DataFrame
-        (report.rs:100-217) — distributed, no driver materialization."""
-        from .report import report_graph_df
-
-        return report_graph_df(self.violations, self.conforms)
+        return report_graph(self.results(), self.conforms)
 
     def to_json(self) -> dict:
         """Nested JSON report (report.rs:219-224, 288-317)."""

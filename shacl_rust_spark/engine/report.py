@@ -1,114 +1,62 @@
-"""Validation-report serialization: RDF graph / JSON / text.
+"""Validation-report rendering: RDF graph / JSON / text.
 
-Set-oriented mirrors of the reference's ValidationReport sinks
-(/root/reference/src/validation/report.rs): `to_graph` emits the
+Driver-side mirrors of the reference's ValidationReport sinks
+(src/validation/report.rs). Every sink renders from the
+same collected violation rows, so a report executes its violations plan
+once whichever sinks are asked for: `report_graph` emits the
 sh:ValidationReport / sh:ValidationResult vocabulary (report.rs:100-217)
-as a triples DataFrame — one row-parallel projection per emitted
-predicate, unioned, so a billion-violation report serializes without
-driver materialization. JSON (report.rs:288-317) and the text rendering
-(report.rs:327-390) collect — they are human-facing sinks for small
-reports.
+as a driver Graph, `report_json` the nested JSON (report.rs:288-317)
+and `report_text` the human-readable rendering (report.rs:327-390).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+import hashlib
+import re
 
-from ..schema import TRIPLES_TYPE
 from .. import vocab as V
+from ..rdf.graph import Graph
+from ..term import Term, Triple, bnode, iri, literal
 
-_REPORT_BNODE = "report"
-
-
-def _iri_struct(value) -> F.Column:
-    return F.struct(
-        F.lit("iri").alias("kind"), value.alias("value"),
-        F.lit("").alias("datatype"), F.lit("").alias("lang"),
-    )
+_SINGLE_IRI_PATH = re.compile(r"<[^>]+>")
 
 
-def _bnode_struct(value) -> F.Column:
-    return F.struct(
-        F.lit("bnode").alias("kind"), value.alias("value"),
-        F.lit("").alias("datatype"), F.lit("").alias("lang"),
-    )
-
-
-def _lit_struct(value, datatype: str) -> F.Column:
-    return F.struct(
-        F.lit("lit").alias("kind"), value.alias("value"),
-        F.lit(datatype).alias("datatype"), F.lit("").alias("lang"),
-    )
-
-
-def report_graph_df(violations: DataFrame, conforms: bool) -> DataFrame:
-    """sh:ValidationReport triples (report.rs:100-217). Result bnode ids
-    are content hashes + a per-duplicate index (bnode labels are
-    arbitrary; these are deterministic and shuffle-safe)."""
-    spark = violations.sparkSession
-    report_subj = _bnode_struct(F.lit(_REPORT_BNODE))
-
-    head = spark.createDataFrame(
-        [
-            (("bnode", _REPORT_BNODE, "", ""), V.RDF_TYPE,
-             ("iri", V.SH + "ValidationReport", "", "")),
-            (("bnode", _REPORT_BNODE, "", ""), V.SH + "conforms",
-             ("lit", "true" if conforms else "false", V.XSD_BOOLEAN, "")),
-        ],
-        TRIPLES_TYPE,
-    )
-
-    v = violations.withColumn(
-        "_rid",
-        F.concat(
-            F.lit("r"),
-            F.md5(F.concat_ws(
-                "\x01", F.to_json(F.struct(*violations.columns)),
-            )),
-            F.lit("-"),
-            (F.monotonically_increasing_id() % 1_000_000_000).cast("string"),
-        ),
-    )
-    rs = _bnode_struct(F.col("_rid"))
-
-    def t(p: str, o_col) -> DataFrame:
-        return v.select(rs.alias("s"), F.lit(p).alias("p"), o_col.alias("o"))
-
-    parts = [
-        v.select(report_subj.alias("s"), F.lit(V.SH + "detail").alias("p"),
-                 rs.alias("o")),
-        t(V.RDF_TYPE, _iri_struct(F.lit(V.SH + "ValidationResult"))),
-        t(V.SH + "focusNode", F.col("focus")),
-        t(V.SH + "resultSeverity", _iri_struct(F.col("severity"))),
-        # source_shape column holds the shape node's n3 form: _:x or <iri>
-        t(
-            V.SH + "sourceShape",
-            F.when(
-                F.col("source_shape").startswith("_:"),
-                _bnode_struct(F.expr("substring(source_shape, 3)")),
-            ).otherwise(
-                _iri_struct(F.regexp_extract("source_shape", "^<(.*)>$", 1))
-            ),
-        ),
-        t(V.SH + "sourceConstraintComponent", _iri_struct(F.col("component"))),
-        v.where(F.col("value").isNotNull()).select(
-            rs.alias("s"), F.lit(V.SH + "value").alias("p"), F.col("value").alias("o")
-        ),
-        # resultPath only for single-IRI paths, bare IRI (report.rs:177-185)
-        v.where(F.col("path").rlike("^<[^>]+>$")).select(
-            rs.alias("s"), F.lit(V.SH + "resultPath").alias("p"),
-            _iri_struct(F.regexp_extract("path", "^<(.*)>$", 1)).alias("o"),
-        ),
-        v.where(F.col("message").isNotNull()).select(
-            rs.alias("s"), F.lit(V.SH + "resultMessage").alias("p"),
-            _lit_struct(F.col("message"), V.XSD_STRING).alias("o"),
-        ),
+def report_graph(violations_rows: list, conforms: bool) -> Graph:
+    """sh:ValidationReport triples (report.rs:100-217). Each result gets
+    its own bnode, labelled by a content hash plus its row index: the
+    labels are deterministic, identical rows stay distinct, and a label
+    cannot plausibly equal a shapes-graph bnode used as sh:sourceShape."""
+    report = bnode("report")
+    triples = [
+        Triple(report, V.RDF_TYPE, iri(V.SH + "ValidationReport")),
+        Triple(report, V.SH + "conforms",
+               literal("true" if conforms else "false", V.XSD_BOOLEAN)),
     ]
-    out = head
-    for p in parts:
-        out = out.unionByName(p)
-    return out
+    for idx, r in enumerate(violations_rows):
+        digest = hashlib.md5(repr(tuple(r)).encode()).hexdigest()
+        node = bnode(f"r{digest}-{idx}")
+        # source_shape holds the shape node's n3 form: _:x or <iri>
+        shape = r.source_shape
+        triples += [
+            Triple(report, V.SH + "detail", node),
+            Triple(node, V.RDF_TYPE, iri(V.SH + "ValidationResult")),
+            Triple(node, V.SH + "focusNode", Term(*r.focus)),
+            Triple(node, V.SH + "resultSeverity", iri(r.severity)),
+            Triple(node, V.SH + "sourceShape",
+                   bnode(shape[2:]) if shape.startswith("_:")
+                   else iri(shape[1:-1])),
+            Triple(node, V.SH + "sourceConstraintComponent",
+                   iri(r.component)),
+        ]
+        if r.value is not None:
+            triples.append(Triple(node, V.SH + "value", Term(*r.value)))
+        # resultPath only for single-IRI paths, bare IRI (report.rs:177-185)
+        if r.path is not None and _SINGLE_IRI_PATH.fullmatch(r.path):
+            triples.append(Triple(node, V.SH + "resultPath", iri(r.path[1:-1])))
+        if r.message is not None:
+            triples.append(Triple(node, V.SH + "resultMessage",
+                                  literal(r.message, V.XSD_STRING)))
+    return Graph(triples)
 
 
 def report_json(violations_rows: list, conforms: bool) -> dict:

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from .rdf.graph import Graph
-from .term import Term, Triple
+from .term import Term
 
 TERM_TYPE = StructType([
     StructField("kind", StringType(), False),      # 'iri' | 'bnode' | 'lit'
@@ -46,13 +46,6 @@ def term_lit(t: Term):
 def graph_to_df(spark: SparkSession, graph: Graph) -> DataFrame:
     rows = [(tuple(t.s), t.p, tuple(t.o)) for t in graph]
     return spark.createDataFrame(rows, TRIPLES_TYPE)
-
-
-def df_to_triples(df: DataFrame) -> list[Triple]:
-    out = []
-    for row in df.collect():
-        out.append(Triple(Term(*row.s), row.p, Term(*row.o)))
-    return out
 
 
 def terms_to_df(spark: SparkSession, terms: list[Term], colname: str = "focus") -> DataFrame:

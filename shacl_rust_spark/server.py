@@ -40,12 +40,10 @@ def _render_report(report, output_format: str) -> str:
     if output_format == "text":
         return report.to_text()
     from .rdf import normalize_format, serialize_graph
-    from .rdf.graph import Graph
-    from .schema import df_to_triples
 
-    g = Graph(df_to_triples(report.to_graph_df()))
     try:
-        return serialize_graph(g, normalize_format(output_format))
+        return serialize_graph(report.to_graph(),
+                               normalize_format(output_format))
     except Exception:
         raise ValueError(
             f"Unsupported output format: '{output_format}'. "
@@ -72,6 +70,21 @@ class ToolServer:
             self._spark.sparkContext.setLogLevel("ERROR")
         return self._spark
 
+    def _validate(self, data_graph: str, shapes_graph: str,
+                  data_format: str, shapes_format: str):
+        from .engine.engine import validate_graphs
+        from .rdf import parse_rdf
+
+        try:
+            data = parse_rdf(data_graph, data_format)
+        except Exception as e:
+            raise ValueError(f"Failed to parse data graph: {e}")
+        try:
+            shapes = parse_rdf(shapes_graph, shapes_format)
+        except Exception as e:
+            raise ValueError(f"Failed to parse shapes graph: {e}")
+        return validate_graphs(self._ensure_spark(), data, shapes)
+
     # --- tools (names + args mirror shacl-mcp) ---------------------------
     def validate_graphs(
         self,
@@ -81,18 +94,8 @@ class ToolServer:
         shapes_format: str = "ttl",
         output_format: str = "text",
     ) -> str:
-        from .engine.engine import validate_graphs
-        from .rdf import parse_rdf
-
-        try:
-            data = parse_rdf(data_graph, data_format)
-        except Exception as e:
-            raise ValueError(f"Failed to parse data graph: {e}")
-        try:
-            shapes = parse_rdf(shapes_graph, shapes_format)
-        except Exception as e:
-            raise ValueError(f"Failed to parse shapes graph: {e}")
-        report = validate_graphs(self._ensure_spark(), data, shapes)
+        report = self._validate(data_graph, shapes_graph, data_format,
+                                shapes_format)
         return _render_report(report, output_format)
 
     def validate_graphs_conforms(
@@ -102,18 +105,8 @@ class ToolServer:
         data_format: str = "ttl",
         shapes_format: str = "ttl",
     ) -> str:
-        from .engine.engine import validate_graphs
-        from .rdf import parse_rdf
-
-        try:
-            data = parse_rdf(data_graph, data_format)
-        except Exception as e:
-            raise ValueError(f"Failed to parse data graph: {e}")
-        try:
-            shapes = parse_rdf(shapes_graph, shapes_format)
-        except Exception as e:
-            raise ValueError(f"Failed to parse shapes graph: {e}")
-        report = validate_graphs(self._ensure_spark(), data, shapes)
+        report = self._validate(data_graph, shapes_graph, data_format,
+                                shapes_format)
         return json.dumps({"conforms": report.conforms})
 
     def lint_graph(self, graph: str, format: str = "ttl") -> str:

@@ -4,6 +4,7 @@ connected components, validated emission, manifest resume."""
 from __future__ import annotations
 
 import json
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +14,27 @@ from shacl_rust_spark.pipeline import (
 )
 
 SF = "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="module")
+def committed_run(spark, tmp_path_factory):
+    """One ``run_pipeline`` at sf0.001, shared by the tests below that
+    start from a completed run."""
+    from shacl_rust_spark.pipeline.run import run_pipeline
+
+    out = str(tmp_path_factory.mktemp("kg_committed") / "kg")
+    return out, run_pipeline(spark, SF, out)
+
+
+@pytest.fixture
+def pipeline_run(committed_run, tmp_path):
+    """This test's own copy of the committed run: (out_dir, commit). The
+    fingerprint does not cover out_dir, so a copy resumes like the
+    original."""
+    src, commit = committed_run
+    out = str(tmp_path / "kg")
+    shutil.copytree(src, out)
+    return out, commit
 
 
 def test_extract_byte_identical(spark):
@@ -51,11 +73,10 @@ def test_detect_mentions_grammar(spark):
     }
 
 
-def test_run_pipeline_end_to_end(spark, tmp_path):
+def test_run_pipeline_end_to_end(spark, pipeline_run):
     from shacl_rust_spark.pipeline.run import run_pipeline
 
-    out = str(tmp_path / "kg")
-    commit = run_pipeline(spark, SF, out)
+    out, commit = pipeline_run
     m = commit["metrics"]
     assert m["pages"] > 0 and m["emitted_triples"] > 0
     assert m["links"]["exact"] > 0 and m["links"]["fuzzy"] > 0
@@ -66,14 +87,13 @@ def test_run_pipeline_end_to_end(spark, tmp_path):
     assert run_pipeline(spark, SF, out)["resumed"]
 
 
-def test_seed_stage_cache_matches_fresh_build(spark, tmp_path):
+def test_seed_stage_cache_matches_fresh_build(spark, pipeline_run):
     """Seeding the kg_* gate memo from a completed run_pipeline output
     (the bench fast path) yields row-identical frames to the gates'
     own in-session builds — including the validated frame, whose
     predicate column round-trips through partitioned-parquet directory
     names."""
     from shacl_rust_spark import queries_kg as K
-    from shacl_rust_spark.pipeline.run import run_pipeline
 
     def _snap():
         return {
@@ -96,8 +116,7 @@ def test_seed_stage_cache_matches_fresh_build(spark, tmp_path):
     fresh_schemas = [f.dtypes for f in fresh_frames]
     fresh = _snap()
     _clear()
-    out = str(tmp_path / "kg_seed")
-    run_pipeline(spark, SF, out)
+    out, _ = pipeline_run
     K.seed_stage_cache(spark, SF, out)
     seeded_frames = (
         K.kg_mentions(spark, SF),
@@ -287,7 +306,7 @@ def test_validated_emission_drops_unlinked(spark):
     assert violations.count() >= 1
 
 
-def test_stage_level_resume(spark, tmp_path):
+def test_stage_level_resume(spark, pipeline_run):
     """A run that dies AFTER intermediate snapshots committed but BEFORE
     the final manifest resumes from the last committed stage snapshot:
     extract/link/CC/canonicalize are skipped, counters restored from the
@@ -296,8 +315,7 @@ def test_stage_level_resume(spark, tmp_path):
 
     from shacl_rust_spark.pipeline.run import run_pipeline
 
-    out = str(tmp_path / "kg")
-    first = run_pipeline(spark, SF, out)
+    out, first = pipeline_run
     m1 = first["metrics"]
     assert "resumed_stages" not in m1
     # simulate a crash after the scratch snapshots committed but before
@@ -316,12 +334,11 @@ def test_stage_level_resume(spark, tmp_path):
 
 @pytest.mark.parametrize("change", ["shapes", "input"])
 def test_resume_fingerprint_covers_shapes(spark, tmp_path, monkeypatch,
-                                          change):
+                                          request, change):
     """Output computed under different shapes or from different input
     never resumes, at the commit level or the stage level; identical
     inputs still do."""
     import os
-    import shutil
 
     import pyarrow.parquet as pq
 
@@ -333,8 +350,10 @@ def test_resume_fingerprint_covers_shapes(spark, tmp_path, monkeypatch,
         os.makedirs(sf)
         for name in ("orders", "documents", "nation"):
             shutil.copy(f"{SF}/{name}.parquet", sf)
-    out = str(tmp_path / "kg")
-    first = run_pipeline(spark, sf, out)
+        out = str(tmp_path / "kg")
+        first = run_pipeline(spark, sf, out)
+    else:
+        out, first = request.getfixturevalue("pipeline_run")
     again = run_pipeline(spark, sf, out)
     assert again["resumed"]
     assert again["fingerprint"] == first["fingerprint"]
@@ -372,14 +391,14 @@ def test_resume_fingerprint_covers_shapes(spark, tmp_path, monkeypatch,
             == first["metrics"]["emitted_triples"])
 
 
-def test_crashed_run_never_resumes_stale_output(spark, tmp_path, monkeypatch):
+def test_crashed_run_never_resumes_stale_output(spark, pipeline_run,
+                                                monkeypatch):
     """A run that dies after overwriting triples/ but before its manifest
     commits leaves no manifest behind: rerunning the earlier, committed
     run recomputes, and its manifest counts what is on disk."""
     from shacl_rust_spark.pipeline.run import run_pipeline
 
-    out = str(tmp_path / "kg")
-    first = run_pipeline(spark, SF, out)
+    out, first = pipeline_run
 
     def crash(*args, **kwargs):
         raise RuntimeError("crash before the manifest")
@@ -397,7 +416,7 @@ def test_crashed_run_never_resumes_stale_output(spark, tmp_path, monkeypatch):
             == first["metrics"]["emitted_triples"])
 
 
-def test_torn_marker_recomputes(spark, tmp_path):
+def test_torn_marker_recomputes(spark, pipeline_run):
     """A truncated run manifest or stage marker reads as uncommitted:
     the rerun succeeds, recomputes from the last intact snapshot and
     emits what the first run did."""
@@ -409,8 +428,8 @@ def test_torn_marker_recomputes(spark, tmp_path):
         with open(path, "r+") as f:
             f.truncate(os.path.getsize(path) // 2)
 
-    out = str(tmp_path / "kg")
-    n = run_pipeline(spark, SF, out)["metrics"]["emitted_triples"]
+    out, first = pipeline_run
+    n = first["metrics"]["emitted_triples"]
 
     tear(f"{out}/_manifest/commit.json")
     second = run_pipeline(spark, SF, out)
